@@ -11,29 +11,60 @@ src/elastic_surv/models/base.py:75-81, delegated to pycox). Definition
 where G is the KM estimate of the *censoring* distribution (event flipped).
 IBS = ∫ BS(τ) dτ / (τ_max − τ_min), trapezoidal over the grid.
 
-Plan shape: the censoring curve G is a KM aggregate (tiny) collected and
-broadcast as a sorted-array literal; each subject row is then scored against
-the grid with pure column expressions (no UDF), and one global aggregate per
-grid point finishes the job. One shuffle total (the KM groupBy); the N-row
-scan is map-only. Terms with G ≤ 0 are dropped (standard IPCW convention).
+Plan shape: only the prediction depends on the model, so the work that
+does not is done once, in Python or per row, never per (row, τ) pair:
+
+- the censoring curve G is a KM aggregate (tiny) collected by
+  :func:`censoring_km`; ``SurvModel.score`` takes it, and the τ grid, from
+  the dataset, which computes both once per test split;
+- each grid point is looked up in Python: its G(τ_k) and the index of
+  the last cut ≤ τ_k (``bisect`` over the sorted lists). They ship with τ_k
+  in ONE SQL-text array-of-structs literal, exploded against the rows;
+- G(T_i⁻) depends only on the row, so it is resolved once per row, before
+  the explode; after it S_i(τ_k) is a plain ``element_at(surv, idx_k)``,
+  with no lambda in the N × |grid| expansion;
+- one global aggregate per grid point finishes the job; its |grid| rows
+  are collected, ordered and integrated in Python.
+
+The N-row scan and its expansion are map-only; the per-τ aggregate is the
+one shuffle (the KM curve adds its own, once per dataset). Terms with
+G ≤ 0 are dropped (standard IPCW convention).
 """
 
 from __future__ import annotations
 
+from bisect import bisect_right
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from elastic_surv_spark.functions.literals import double_array, double_sql
 from elastic_surv_spark.metrics.km import km_curve
 
 
 def step_lookup(ts: list[float], vals: list[float], t: Column, strict: bool = False) -> Column:
     """Right-continuous step function value at t: vals[max {k : ts[k] <= t}]
-    (or < t when strict); 1.0 before the first step. Pure JVM expression."""
-    ts_lit = F.array(*[F.lit(float(x)) for x in ts])
-    vals_lit = F.array(*[F.lit(float(v)) for v in vals])
+    (or < t when strict); 1.0 before the first step. Pure JVM expression.
+
+    Each literal appears once in the expression: Spark parses SQL-text
+    literals again at every place a column uses them. Hence the leading
+    1.0 in the values, which the count of steps indexes directly."""
+    ts_lit = double_array(ts)
+    vals_lit = double_array([1.0, *vals])
     cond = (lambda c: c < t) if strict else (lambda c: c <= t)
-    idx = F.size(F.filter(ts_lit, cond))
-    return F.when(idx > 0, F.element_at(vals_lit, idx)).otherwise(F.lit(1.0))
+    return F.element_at(vals_lit, F.size(F.filter(ts_lit, cond)) + 1)
+
+
+def step_value(vals: Column, idx: Column) -> Column:
+    """vals[idx] for idx the 1-based count of steps at or before t; 1.0
+    when no step is (idx = 0)."""
+    return F.when(idx > 0, F.element_at(vals, idx)).otherwise(F.lit(1.0))
+
+
+def _step_at(ts: list[float], vals: list[float], x: float) -> float:
+    """``step_lookup`` (non-strict) at one point, in Python; ``ts`` sorted."""
+    idx = bisect_right(ts, x)
+    return float(vals[idx - 1]) if idx > 0 else 1.0
 
 
 def censoring_km(
@@ -42,7 +73,8 @@ def censoring_km(
     event_col: str,
     max_curve_points: int | None = None,
 ) -> tuple[list[float], list[float]]:
-    """KM of the censoring distribution (event indicator flipped), collected.
+    """KM of the censoring distribution (event indicator flipped), collected
+    as ``(ts, gs)`` with ``ts`` ascending.
 
     With discrete times the curve is one row per distinct time — tiny. With
     continuous times it is one row per subject, so pass ``max_curve_points``
@@ -62,27 +94,35 @@ def brier_curve(
     pred: DataFrame,
     time_col: str,
     event_col: str,
-    surv_at,
+    surv_col: str,
+    cuts: list[float],
     grid: list[float],
-    max_curve_points: int | None = 512,
+    censoring: tuple[list[float], list[float]],
 ) -> DataFrame:
-    """BS(τ) for each τ in grid. ``surv_at(row_cols, tau_col) -> Column``
-    evaluates the subject's predicted survival at τ. The censoring curve is
-    bounded at ``max_curve_points`` (continuous-time safety; a no-op below
-    the cap)."""
-    ts, gs = censoring_km(pred, time_col, event_col, max_curve_points=max_curve_points)
+    """BS(τ) for each τ in grid: ``(k, tau, brier)``, one row per grid
+    point, in no particular order.
 
-    grid_df = F.explode(
-        F.array(*[F.struct(F.lit(i).alias("k"), F.lit(float(t)).alias("tau")) for i, t in enumerate(grid)])
-    ).alias("g")
-    expanded = pred.select("*", grid_df).select("*", "g.k", "g.tau")
+    ``surv_col`` holds each subject's predicted survival at the sorted
+    ``cuts`` (S(τ) = surv[last cut ≤ τ], 1.0 before the first cut);
+    ``censoring`` is the ``(ts, gs)`` pair :func:`censoring_km` returns.
+    """
+    ts, gs = censoring
+    points = ", ".join(
+        f"named_struct('k', {k}, 'tau', {double_sql(tau)}, "
+        f"'g_tau', {double_sql(_step_at(ts, gs, tau))}, "
+        f"'sidx', {bisect_right(cuts, tau)})"
+        for k, tau in enumerate(grid)
+    )
+    expanded = pred.select(
+        F.col(time_col).alias("_t"),
+        F.col(event_col).cast("int").alias("_e"),
+        F.col(surv_col).alias("_s"),
+        step_lookup(ts, gs, F.col(time_col), strict=True).alias("_g_tminus"),
+    ).select("*", F.inline(F.expr(f"array({points})")))
 
-    t = F.col(time_col)
-    e = F.col(event_col).cast("int")
-    tau = F.col("tau")
-    s_tau = surv_at(expanded, tau)
-    g_tminus = step_lookup(ts, gs, t, strict=True)
-    g_tau = step_lookup(ts, gs, tau, strict=False)
+    t, e, tau = F.col("_t"), F.col("_e"), F.col("tau")
+    g_tminus, g_tau = F.col("_g_tminus"), F.col("g_tau")
+    s_tau = step_value(F.col("_s"), F.col("sidx"))
 
     term_event = F.when(
         (t <= tau) & (e == 1) & (g_tminus > 0), (s_tau ** 2) / g_tminus
@@ -90,12 +130,8 @@ def brier_curve(
     term_alive = F.when((t > tau) & (g_tau > 0), ((1 - s_tau) ** 2) / g_tau).otherwise(
         F.lit(0.0)
     )
-
-    return (
-        expanded.select(F.col("k"), tau.alias("tau"), (term_event + term_alive).alias("_term"))
-        .groupBy("k", "tau")
-        .agg((F.sum("_term") / F.count("*")).alias("brier"))
-        .orderBy("k")
+    return expanded.groupBy("k", "tau").agg(
+        (F.sum(term_event + term_alive) / F.count("*")).alias("brier")
     )
 
 
@@ -103,17 +139,20 @@ def integrated_brier_score(
     pred: DataFrame,
     time_col: str,
     event_col: str,
-    surv_at,
+    surv_col: str,
+    cuts: list[float],
     grid: list[float],
-    max_curve_points: int | None = 512,
+    censoring: tuple[list[float], list[float]],
 ) -> float:
-    """Trapezoidal IBS over the grid (≡ EvalSurv.integrated_brier_score)."""
-    rows = brier_curve(
-        pred, time_col, event_col, surv_at, grid, max_curve_points=max_curve_points
-    ).collect()
+    """Trapezoidal IBS over the grid (≡ EvalSurv.integrated_brier_score);
+    NaN when the grid spans no time (fewer than two points, or all equal)."""
+    rows = sorted(
+        brier_curve(pred, time_col, event_col, surv_col, cuts, grid, censoring).collect(),
+        key=lambda r: r["k"],
+    )
     bs = [float(r["brier"]) for r in rows]
     taus = [float(r["tau"]) for r in rows]
-    if len(bs) < 2:
+    if len(bs) < 2 or taus[-1] == taus[0]:
         return float("nan")
     area = 0.0
     for i in range(len(bs) - 1):
@@ -250,13 +289,3 @@ def ipcw_brier_km_by(
         )
     return out.select(g, "k", "tau", "brier")
 
-
-def surv_from_curve(cuts: list[float], surv_col: str):
-    """surv_at factory for per-subject survival-array predictions over cuts."""
-
-    def surv_at(df_cols, tau: Column) -> Column:
-        cuts_lit = F.array(*[F.lit(float(c)) for c in cuts])
-        idx = F.size(F.filter(cuts_lit, lambda c: c <= tau))
-        return F.when(idx > 0, F.element_at(F.col(surv_col), idx)).otherwise(F.lit(1.0))
-
-    return surv_at

@@ -37,6 +37,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from elastic_surv_spark.functions.literals import double_array
+from elastic_surv_spark.metrics.brier import step_value
+
 
 def _pairwise_counts(df: DataFrame) -> DataFrame:
     """Self-join form on (t, e, r) columns — O(n²), small-n tool."""
@@ -55,7 +58,7 @@ def _pairwise_counts(df: DataFrame) -> DataFrame:
 def _bucket(col, boundaries: list[float]):
     """Monotone bucket id = #boundaries ≤ value (JVM-side; equal values ⇒
     equal bucket, bucket_i > bucket_j ⇒ value_i > value_j)."""
-    arr = F.array(*[F.lit(float(b)) for b in boundaries])
+    arr = double_array(boundaries)
     return F.size(F.filter(arr, lambda b: b <= col.cast("double")))
 
 
@@ -537,7 +540,7 @@ def concordance_td_exact(
     ``concordance_td`` remains the quick-sweep default because model
     scoring is tolerance-based anyway.
     """
-    cuts_lit = F.array(*[F.lit(float(c)) for c in cuts])
+    cuts_lit = double_array(cuts)
     base = pred.select(
         F.col(time_col).cast("double").alias("t"),
         F.col(event_col).cast("int").alias("e"),
@@ -724,7 +727,7 @@ def concordance_td_exact_by(
     NULL time or NULL curve are dropped up front. The input persists
     across the cut passes and releases in ``finally``.
     """
-    cuts_lit = F.array(*[F.lit(float(c)) for c in cuts])
+    cuts_lit = double_array(cuts)
     base = df.select(
         F.col(group_col).alias("_g"),
         F.col(time_col).cast("double").alias("t"),
@@ -893,8 +896,9 @@ def concordance_td(
       unbiased estimate beats the extra passes.
 
     The curve lookup S(t) = surv[max {k : cuts[k] <= t}] is a JVM-side
-    higher-order expression; the pairwise part is a self-join like
-    Harrell's.
+    higher-order expression evaluated once per event row, at its own T_i;
+    the pairwise part is a self-join like Harrell's on those rows, where
+    the other side's S_j(T_i) is a plain array index.
     """
     if mode not in ("auto", "pairwise", "exact", "sample"):
         raise ValueError(f"concordance_td: unknown mode {mode!r}")
@@ -910,21 +914,22 @@ def concordance_td(
             pred, time_col, event_col, surv_col, cuts
         )
         return float("nan") if cidx is None else float(cidx)
-    cuts_lit = F.array(*[F.lit(float(c)) for c in cuts])
-
-    def surv_at(surv, t):
-        idx = F.size(F.filter(cuts_lit, lambda c: c <= t))
-        return F.when(idx > 0, F.element_at(surv, idx)).otherwise(F.lit(1.0))
-
-    a = pred.select(
-        F.col(time_col).alias("t_i"),
-        F.col(event_col).alias("e_i"),
-        F.col(surv_col).alias("s_i"),
+    # every pair's lookups happen at the index subject's time T_i: resolve
+    # its cut index and S_i(T_i) once per event row, so the join only reads
+    # S_j(T_i) = s_j[idx_i]
+    t_i = F.col(time_col)
+    a = (
+        pred.filter(F.col(event_col) == 1)
+        .select(
+            t_i.alias("t_i"),
+            F.col(surv_col).alias("s_i"),
+            F.size(F.filter(double_array(cuts), lambda c: c <= t_i)).alias("idx_i"),
+        )
+        .select("t_i", "idx_i", step_value(F.col("s_i"), F.col("idx_i")).alias("si_ti"))
     )
     b = pred.select(F.col(time_col).alias("t_j"), F.col(surv_col).alias("s_j"))
-    pairs = a.join(b, (F.col("t_i") < F.col("t_j")) & (F.col("e_i") == 1)).select(
-        surv_at(F.col("s_i"), F.col("t_i")).alias("si_ti"),
-        surv_at(F.col("s_j"), F.col("t_i")).alias("sj_ti"),
+    pairs = a.join(b, F.col("t_i") < F.col("t_j")).select(
+        "si_ti", step_value(F.col("s_j"), F.col("idx_i")).alias("sj_ti")
     )
     row = pairs.agg(
         F.count("*").alias("n"),

@@ -14,8 +14,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from elastic_surv_spark.metrics.brier import integrated_brier_score, surv_from_curve
-from elastic_surv_spark.metrics.concordance import concordance_td
+from elastic_surv_spark.functions.literals import double_array
+from elastic_surv_spark.models.base import score_model
 from elastic_surv_spark.models.data import SurvDataset
 
 _EPS = 1e-6
@@ -84,7 +84,7 @@ class AFTBaselineModel:
         for c, b in zip(self._features, self.coefficients):
             mu = mu + F.col(c).cast("double") * F.lit(float(b))
         sigma = float(self.scale)
-        cuts_lit = F.array(*[F.lit(float(c)) for c in self.cuts])
+        cuts_lit = double_array(self.cuts)
         surv = F.transform(
             cuts_lit,
             lambda c: F.exp(-F.exp((F.log(c) - mu) / F.lit(sigma))),
@@ -92,16 +92,4 @@ class AFTBaselineModel:
         return df.select(*id_cols, surv.alias("surv"))
 
     def score(self, dataset: SurvDataset, n_grid: int = 100) -> dict[str, float]:
-        t_col, e_col = dataset.time_column, dataset.event_column
-        pred = self.predict(
-            dataset.test_df, id_cols=[t_col, e_col], features=dataset.features
-        ).cache()
-        cuts = [float(c) for c in self.cuts]
-        row = pred.agg(F.min(t_col).alias("lo"), F.max(t_col).alias("hi")).first()
-        grid = np.linspace(float(row["lo"]), float(row["hi"]), n_grid).tolist()
-        c_index = concordance_td(pred, t_col, e_col, "surv", cuts)
-        brier = integrated_brier_score(
-            pred, t_col, e_col, surv_from_curve(cuts, "surv"), grid
-        )
-        pred.unpersist()
-        return {"c_index": float(c_index), "brier_score": float(brier)}
+        return score_model(self, dataset, n_grid)

@@ -4,7 +4,8 @@
 ``hyperparameter_space`` / ``sample_hyperparameters`` / ``name`` / ``train``
 / ``predict`` / ``score``. ``score`` reproduces base.py:61-82: predictions on
 the test split → Antolini time-dependent concordance + integrated Brier
-score over a 100-point linspace(t_min, t_max) grid, censoring via KM.
+score over a 100-point linspace(t_min, t_max) grid, censoring via KM
+(:func:`score_model`, shared with the AFT baseline).
 
 Training paths:
 - ``local``   — exact reference semantics: sequential mini-batches, Adam,
@@ -30,9 +31,8 @@ from typing import Any, Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from elastic_surv_spark.metrics.brier import integrated_brier_score, surv_from_curve
+from elastic_surv_spark.metrics.brier import integrated_brier_score
 from elastic_surv_spark.metrics.concordance import concordance_td
 from elastic_surv_spark.models.data import SurvDataset
 from elastic_surv_spark.models.nn import MLP, Adam
@@ -272,19 +272,20 @@ class SurvModel(ABC):
 
     # ---- scoring (≡ reference base.py:61-82) -----------------------------
     def score(self, dataset: SurvDataset, n_grid: int = 100) -> dict[str, float]:
-        t_col, e_col = dataset.time_column, dataset.event_column
-        pred = self.predict(
-            dataset.test_df, id_cols=[t_col, e_col], features=dataset.features
-        ).cache()
-        cuts = [float(c) for c in self.cuts]
-        row = pred.agg(F.min(t_col).alias("lo"), F.max(t_col).alias("hi")).first()
-        grid = np.linspace(float(row["lo"]), float(row["hi"]), n_grid).tolist()
-        c_index = concordance_td(pred, t_col, e_col, "surv", cuts)
-        brier = integrated_brier_score(
-            pred, t_col, e_col, surv_from_curve(cuts, "surv"), grid
-        )
-        pred.unpersist()
-        return {"c_index": float(c_index), "brier_score": float(brier)}
+        """``{"c_index", "brier_score"}`` on the test split: Antolini
+        time-dependent concordance and the integrated Brier score over
+        ``linspace(t_min, t_max, n_grid)``, censoring by Kaplan-Meier.
+
+        Only the prediction frame depends on the model. The censoring curve
+        and the grid depend on the test split alone, so they come from
+        ``dataset.scoring_reference``, which computes them once however many
+        models (or concurrent Hyperband trials) score on the dataset. Inside
+        the metrics, the per-τ lookups (G(τ_k), the cut index of τ_k) are
+        resolved in Python and G(T_i⁻) once per row, so the row × grid
+        expansion is plain array indexing. The prediction frame is cached
+        for the two metrics and released even when one of them raises.
+        """
+        return score_model(self, dataset, n_grid)
 
     # ---- misc ------------------------------------------------------------
     def hyperparams_hash(self, params: dict[str, Any]) -> str:
@@ -298,3 +299,20 @@ class SurvModel(ABC):
                 return o.tolist()
             raise TypeError
         return json.dumps(params, sort_keys=True, default=default)
+
+
+def score_model(model, dataset: SurvDataset, n_grid: int = 100) -> dict[str, float]:
+    """:meth:`SurvModel.score` for any model with ``cuts`` and ``predict``
+    (the AFT baseline scores through it too)."""
+    t_col, e_col = dataset.time_column, dataset.event_column
+    censoring, grid = dataset.scoring_reference(n_grid)
+    cuts = [float(c) for c in model.cuts]
+    pred = model.predict(
+        dataset.test_df, id_cols=[t_col, e_col], features=dataset.features
+    ).cache()
+    try:
+        c_index = concordance_td(pred, t_col, e_col, "surv", cuts)
+        brier = integrated_brier_score(pred, t_col, e_col, "surv", cuts, grid, censoring)
+    finally:
+        pred.unpersist()
+    return {"c_index": float(c_index), "brier_score": float(brier)}

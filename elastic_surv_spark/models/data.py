@@ -6,16 +6,26 @@ src/elastic_surv/dataset.py:16-225). Here the featurization is fit ONCE on
 the full frame (fixing the reference's refit-per-copy waste), the transform
 is a lazy column expression fused into every downstream plan by Catalyst,
 and the split DataFrames are cached — the reference re-pulled every batch
-from ES every epoch (SURVEY §4 'Caching / reuse').
+from ES every epoch (SURVEY §4 'Caching / reuse'). What scoring needs from
+the test split alone (the censoring curve, the time grid) is computed once
+per dataset, not once per scored model.
 """
 
 from __future__ import annotations
 
+import threading
+
 import numpy as np
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from elastic_surv_spark.frame import SurvFrame
 from elastic_surv_spark.functions.featurize import OneHotFeaturizer
+from elastic_surv_spark.metrics import brier
+
+#: cap on the censoring curve's points (continuous-time safety; a no-op
+#: while the test split has fewer distinct times)
+CENSORING_CURVE_POINTS = 512
 
 
 class SurvDataset:
@@ -35,6 +45,9 @@ class SurvDataset:
         if cache:
             self.train_df = self.train_df.cache()
             self.test_df = self.test_df.cache()
+        # Hyperband trials score concurrently from a thread pool
+        self._scoring_lock = threading.Lock()
+        self._scoring_stats: tuple[tuple[list[float], list[float]], float, float] | None = None
 
     @property
     def in_features(self) -> int:
@@ -54,6 +67,29 @@ class SurvDataset:
             # ≡ reference dataset.py:213-214 — outcome hook at batch time
             t, e = self.frame.label_transformer(t, e)
         return X, t, e
+
+    def scoring_reference(
+        self, n_grid: int = 100
+    ) -> tuple[tuple[list[float], list[float]], list[float]]:
+        """``(censoring, grid)`` for scoring on the test split: the censoring
+        KM curve as ``brier.censoring_km``'s ``(ts, gs)`` and the
+        ``linspace(min T, max T, n_grid)`` time grid.
+
+        Both depend on the test split alone: the curve and the time range
+        are computed on first use (under a lock, so concurrent scorers wait
+        for one computation) and reused by every later call.
+        """
+        with self._scoring_lock:
+            if self._scoring_stats is None:
+                t = self.time_column
+                censoring = brier.censoring_km(
+                    self.test_df, t, self.event_column,
+                    max_curve_points=CENSORING_CURVE_POINTS,
+                )
+                row = self.test_df.agg(F.min(t).alias("lo"), F.max(t).alias("hi")).first()
+                self._scoring_stats = (censoring, float(row["lo"]), float(row["hi"]))
+        censoring, lo, hi = self._scoring_stats
+        return censoring, np.linspace(lo, hi, n_grid).tolist()
 
     def train_numpy(self):
         return self.to_numpy(self.train_df)

@@ -21,6 +21,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from elastic_surv_spark.functions.literals import double_array
+
 
 class LabelTransform:
     def __init__(self, cuts: np.ndarray):
@@ -62,7 +64,7 @@ class LabelTransform:
 
     def transform(self, df: DataFrame, time_col: str, out_col: str = "idx_duration") -> DataFrame:
         """Distributed form: Bucketizer-equivalent via array search (JVM-side)."""
-        cuts_lit = F.array(*[F.lit(float(c)) for c in self.cuts])
+        cuts_lit = double_array(self.cuts)
         idx = F.size(F.filter(cuts_lit, lambda c: c <= F.col(time_col))) - 1
         return df.withColumn(
             out_col, F.greatest(F.lit(0), F.least(F.lit(len(self.cuts) - 1), idx))

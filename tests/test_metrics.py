@@ -10,10 +10,11 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from elastic_surv_spark.functions.literals import double_array
 from elastic_surv_spark.metrics.brier import (
     brier_curve,
+    censoring_km,
     integrated_brier_score,
-    surv_from_curve,
 )
 from elastic_surv_spark.metrics.concordance import (
     concordance_td,
@@ -243,16 +244,43 @@ def test_ipcw_brier_matches_numpy(spark, surv_pdf):
     df = spark.createDataFrame(pdf)
 
     grid = np.linspace(t.min(), t.max(), 10).tolist()
-    got = brier_curve(df, "t", "e", surv_from_curve(cuts, "surv"), grid).toPandas()
+    censoring = censoring_km(df, "t", "e", max_curve_points=512)
+    got = brier_curve(df, "t", "e", "surv", cuts, grid, censoring).toPandas()
     want = np_ipcw_brier(t, e, np.array(cuts), surv_matrix, grid)
     assert np.allclose(np.sort(got["tau"].to_numpy()), grid)
     got_sorted = got.sort_values("k")["brier"].to_numpy()
     assert np.allclose(got_sorted, want, atol=1e-12)
 
-    ibs = integrated_brier_score(df, "t", "e", surv_from_curve(cuts, "surv"), grid)
+    ibs = integrated_brier_score(df, "t", "e", "surv", cuts, grid, censoring)
     want_ibs = np.trapz(want, grid) / (grid[-1] - grid[0])
     assert abs(ibs - want_ibs) < 1e-12
     assert 0 <= ibs <= 1
+
+
+def test_ibs_nan_when_all_times_equal(spark):
+    # every test time equal: the linspace grid collapses to one instant, so
+    # there is no time span to integrate over (0/0) — NaN, like a 1-point grid
+    cuts = [2.0, 5.0, 8.0]
+    df = spark.createDataFrame(
+        pd.DataFrame({"t": [5.0] * 3, "e": [1, 0, 1], "surv": [[0.9, 0.6, 0.3]] * 3})
+    )
+    censoring = censoring_km(df, "t", "e")
+    grid = np.linspace(5.0, 5.0, 100).tolist()
+    assert np.isnan(integrated_brier_score(df, "t", "e", "surv", cuts, grid, censoring))
+
+
+def test_double_array_literal_round_trips_bit_exact(spark):
+    import struct
+
+    vals = [0.1, 1e-05, 5e-324, 1.7976931348623157e308, -0.0]
+    got = spark.range(1).select(double_array(vals).alias("a")).first()["a"]
+    assert [struct.pack(">d", g) for g in got] == [struct.pack(">d", v) for v in vals]
+    empty = spark.range(1).select(double_array([]).alias("a"))
+    assert empty.schema["a"].dataType.simpleString() == "array<double>"
+    assert empty.first()["a"] == []
+    for bad in (float("nan"), float("inf"), float("-inf")):
+        with pytest.raises(ValueError):
+            double_array([1.0, bad])
 
 
 def test_cumulative_incidence_matches_numpy(spark):

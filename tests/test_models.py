@@ -156,6 +156,51 @@ def test_aft_baseline_scores(dataset):
     assert s["c_index"] > 0.5  # informative covariates -> better than random
 
 
+def test_score_equals_fresh_metric_calls(dataset):
+    # score() takes the censoring curve and grid from the dataset; the same
+    # two metrics computed anew on a fresh prediction frame, with a
+    # fresh censoring_km, must agree exactly
+    from elastic_surv_spark.metrics.brier import censoring_km, integrated_brier_score
+    from elastic_surv_spark.metrics.concordance import concordance_td
+
+    model = LogisticHazardModel(
+        in_features=dataset.in_features, epochs=3, patience=3, seed=42
+    )
+    model.train(dataset)
+    scores = model.score(dataset)
+
+    t, e = dataset.time_column, dataset.event_column
+    pred = model.predict(dataset.test_df, id_cols=[t, e], features=dataset.features)
+    cuts = [float(c) for c in model.cuts]
+    times = dataset.test_df.select(t).toPandas()[t]
+    grid = np.linspace(float(times.min()), float(times.max()), 100).tolist()
+    censoring = censoring_km(pred, t, e, max_curve_points=512)
+    assert scores == {
+        "c_index": concordance_td(pred, t, e, "surv", cuts),
+        "brier_score": integrated_brier_score(pred, t, e, "surv", cuts, grid, censoring),
+    }
+
+
+def test_score_releases_prediction_frame_when_a_metric_raises(spark, dataset, monkeypatch):
+    import elastic_surv_spark.models.base as base
+
+    model = LogisticHazardModel(
+        in_features=dataset.in_features, epochs=1, patience=1, seed=42
+    )
+    model.train(dataset)
+    dataset.scoring_reference()  # per-dataset state settles before counting
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+
+    def failing_metric(*args, **kwargs):
+        raise RuntimeError("metric failed")
+
+    monkeypatch.setattr(base, "integrated_brier_score", failing_metric)
+    with pytest.raises(RuntimeError, match="metric failed"):
+        model.score(dataset)
+    assert jsc.getPersistentRDDs().size() == before
+
+
 def test_mlp_block_order_matches_mlpvanilla():
     # torchtuples DenseVanillaBlock: Linear -> activation -> BatchNorm -> Dropout
     from elastic_surv_spark.models.nn import MLP, BatchNorm1d, Dense, Dropout, ReLU

@@ -58,3 +58,25 @@ def test_seed_trim_orders_families(spark):
     assert set(opt.seeds) <= {LogisticHazardModel.name(), CoxPHModel.name()}
     scores = [opt.model_best_score[name] for name in opt.seeds]
     assert scores == sorted(scores, reverse=True)
+
+
+def test_hyperband_computes_censoring_curve_once_per_dataset(spark, monkeypatch):
+    # concurrent trials (parallelism=2) all score on one dataset: the
+    # censoring curve depends on its test split alone, so it is built once
+    import elastic_surv_spark.metrics.brier as brier
+
+    calls = []
+    real = brier.censoring_km
+
+    def counting(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(brier, "censoring_km", counting)
+    frame = SurvFrame.from_pandas(spark, gbsg2_like(200), "time", "cens")
+    dataset = SurvDataset(frame)
+    opt = HyperbandOptimizer(
+        seeds=[LogisticHazardModel], max_iter=3, eta=3, output_epochs=1, parallelism=2
+    )
+    opt.select_model(dataset)
+    assert len(calls) == 1
