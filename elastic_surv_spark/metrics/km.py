@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 def quantize_times(
     df: DataFrame, time_col: str, max_curve_points: int,
-    stats_from: DataFrame | None = None,
+    stats: tuple[int, float | None, float | None] | None = None,
 ) -> DataFrame:
     """Equidistant time coarsening to ≤ max_curve_points+1 distinct values
     (each time maps to its bin's upper edge — the standard life-table
@@ -35,20 +35,26 @@ def quantize_times(
     the cap, so small-scale results are bit-identical to the exact form.
     Portable semantics: plain min/max + ceil arithmetic, reproducible in SQL.
 
-    ``stats_from``: optional cheaper frame with the SAME time column to run
-    the two eager stats jobs (distinct count, min/max) against — pass it
-    when ``df`` is expensive to execute (e.g. carries a model-inference
-    mapInPandas stage) but the raw input shares the time column.
+    The coarsening needs the time column's distinct count and, above the
+    cap, its min and max: two eager jobs on ``df``. ``stats`` passes them
+    precomputed as ``(distinct count, min, max)`` instead — for callers
+    whose ``df`` is expensive to execute (e.g. carries a model-inference
+    mapInPandas stage) but whose raw input shares the time column, such as
+    ``SurvDataset.train_time_stats``; then no job runs here.
     """
-    stats = stats_from if stats_from is not None else df
-    nd = stats.select(F.countDistinct(time_col).alias("nd")).first()["nd"]
+    if stats is None:
+        nd = df.select(F.countDistinct(time_col).alias("nd")).first()["nd"]
+        if nd <= max_curve_points:
+            return df
+        row = df.agg(
+            F.min(time_col).cast("double").alias("lo"),
+            F.max(time_col).cast("double").alias("hi"),
+        ).first()
+        stats = (nd, row["lo"], row["hi"])
+    nd, lo, hi = stats
     if nd <= max_curve_points:
         return df
-    row = stats.agg(
-        F.min(time_col).cast("double").alias("lo"),
-        F.max(time_col).cast("double").alias("hi"),
-    ).first()
-    lo, hi = float(row["lo"]), float(row["hi"])
+    lo, hi = float(lo), float(hi)
     width = (hi - lo) / max_curve_points
     t = F.col(time_col).cast("double")
     # bin index clamped to max_curve_points: IEEE division can put

@@ -10,17 +10,17 @@ the same batch-local semantics as pycox's CoxPH loss:
 
     L = -(1/D) Σ_{i: e_i=1} [ g_i - log Σ_{j: t_j >= t_i} exp(g_j) ]
 
-Baseline hazards are computed DISTRIBUTED: one mapInPandas forward pass for
-exp(g), groupBy duration + reverse-cumulative window for risk-set sums,
-h0(t) = d_t / Σ_{T_j >= t} exp(g_j) — the window-aggregate plan SURVEY §2.9
-M1 calls for. The collected curve is one row per distinct event time
-(quantized to ≤ ``max_curve_points`` at scale).
+Baseline hazards come from one distributed aggregate: a mapInPandas forward
+pass for exp(g) feeds a ``groupBy(duration)`` of event counts d_t and exp(g)
+sums, one row per distinct time (quantized to ≤ ``max_curve_points`` at
+scale). The driver collects those bounded rows and runs the two cumulative
+sums over them: the reverse one for the risk-set sums, h0(t) = d_t /
+Σ_{T_j >= t} exp(g_j), and the forward one for H0(t) = Σ_{s <= t} h0(s).
 """
 
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from elastic_surv_spark.metrics.km import quantize_times
@@ -91,61 +91,38 @@ class CoxPHModel(SurvModel):
         return float(loss), dg[:, None]
 
     def _post_fit(self, dataset: SurvDataset) -> None:
-        """Breslow baseline hazards as a distributed window aggregate
+        """Breslow baseline hazards from one distributed aggregate
         (≡ reference compute_baseline_hazards, model_cox_ph.py:100-103).
 
         Scale posture: the distinct-time domain is coarsened to
         ≤ ``max_curve_points`` bins DISTRIBUTEDLY (``quantize_times``, the
         same life-table discretization metrics/km.py uses — a no-op below
         the cap, so discrete-time curves stay bit-identical to the exact
-        form) BEFORE the cum-sum windows and the collect. With continuous
-        float times at any n, the grouped curve, both windows, and the
-        driver collect are all O(max_curve_points) — no driver-side O(n)
-        anywhere in the fit.
+        form) BEFORE the ``groupBy(t)`` aggregate and its collect. The
+        quantization statistics come from ``dataset.train_time_stats()``
+        (computed once per dataset on the raw train split — running them
+        on the scored frame would repeat the mapInPandas forward pass,
+        since column pruning cannot reach through Python). The two
+        cumulative sums then run on the driver over the ≤ max_curve_points
+        + 1 collected rows. With continuous float times at any n, the
+        collect and the driver work are O(max_curve_points).
         """
         scored = self.predict_risk(dataset.train_df, dataset)
         t_col, e_col = dataset.time_column, dataset.event_column
-        # stats_from: the two eager quantization stats jobs (distinct count,
-        # min/max of the time column) run on the RAW train frame — running
-        # them on `scored` would execute the mapInPandas forward pass two
-        # extra times per fit (column pruning can't reach through Python).
         scored = quantize_times(
             scored.withColumn(t_col, F.col(t_col).cast("double")),
             t_col,
             self.max_curve_points,
-            stats_from=dataset.train_df.select(F.col(t_col).cast("double").alias(t_col)),
-        )
-        grouped = scored.groupBy(F.col(t_col).alias("t")).agg(
-            F.sum(F.col(e_col).cast("double")).alias("d"),
-            F.sum("exp_g").alias("sum_eg"),
-        )
-        # constant-valued partition column (see metrics/km.py: a bare
-        # literal is constant-folded out of the partition spec, degrading
-        # to the warned unpartitioned form): the windows run over the
-        # bounded aggregated curve — one deliberate task. The coalesce
-        # matters: pmod(d, 1) alone goes NULL when a bin's events are all
-        # NULL (sum of NULLs), silently splitting the window into two
-        # partitions and corrupting the cumulative baseline-hazard sums.
-        grouped = grouped.withColumn(
-            "_p", F.pmod(F.coalesce(F.col("d").cast("long"), F.lit(0)), F.lit(1))
-        )
-        w_rev = (
-            Window.partitionBy("_p")
-            .orderBy(F.desc("t"))
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        w_fwd = (
-            Window.partitionBy("_p")
-            .orderBy(F.asc("t"))
-            .rowsBetween(Window.unboundedPreceding, 0)
+            stats=dataset.train_time_stats(),
         )
         curve = (
-            grouped.withColumn("denom", F.sum("sum_eg").over(w_rev))
-            .withColumn("h0", F.col("d") / F.col("denom"))
-            .withColumn("H0", F.sum("h0").over(w_fwd))
-            .select("t", "H0")
-            .orderBy("t")
-        ).collect()
+            scored.groupBy(F.col(t_col).alias("t"))
+            .agg(
+                F.sum(F.col(e_col).cast("double")).alias("d"),
+                F.sum("exp_g").alias("sum_eg"),
+            )
+            .collect()
+        )
         # bounded by construction: quantize_times caps the domain at
         # max_curve_points bins (+1 for the lower edge). A hard raise, not
         # an assert — the driver-side collect bound is load-bearing and
@@ -155,8 +132,15 @@ class CoxPHModel(SurvModel):
                 f"baseline-hazard curve has {len(curve)} points, above the "
                 f"max_curve_points={self.max_curve_points} collect bound"
             )
+        curve.sort(key=lambda r: r["t"])
+        # risk-set sums: Σ_{T_j >= t} exp(g_j), accumulated from the latest t
+        denom = _running_sum([r["sum_eg"] for r in reversed(curve)])[::-1]
+        h0 = [
+            None if r["d"] is None or q is None else r["d"] / q
+            for r, q in zip(curve, denom)
+        ]
         self.cuts = np.array([float(r["t"]) for r in curve])
-        self.baseline_cumhaz = np.array([float(r["H0"]) for r in curve])
+        self.baseline_cumhaz = np.array([float(h) for h in _running_sum(h0)])
 
     def predict_risk(self, df, dataset: SurvDataset):
         """Adds exp_g (partial hazard) via distributed forward pass."""
@@ -195,3 +179,16 @@ class CoxPHModel(SurvModel):
         # S(t|x) = exp(-H0(t) * exp(g))  (≡ model_cox_ph.py:106-110)
         eg = np.exp(z[:, 0])
         return np.exp(-np.outer(eg, self.baseline_cumhaz))
+
+
+def _running_sum(values: list[float | None]) -> list[float | None]:
+    """SQL ``sum`` over a running frame, in order: NULLs are skipped, the
+    sum is NULL until the first value, and each step adds to the sum
+    exactly as Spark's ``Sum`` does (``coalesce(sum, 0.0) + value``)."""
+    out: list[float | None] = []
+    acc = None
+    for v in values:
+        if v is not None:
+            acc = (0.0 if acc is None else acc) + v
+        out.append(acc)
+    return out

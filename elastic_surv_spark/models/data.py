@@ -7,8 +7,10 @@ the full frame (fixing the reference's refit-per-copy waste), the transform
 is a lazy column expression fused into every downstream plan by Catalyst,
 and the split DataFrames are cached — the reference re-pulled every batch
 from ES every epoch (SURVEY §4 'Caching / reuse'). What scoring needs from
-the test split alone (the censoring curve, the time grid) is computed once
-per dataset, not once per scored model.
+the test split alone (the censoring curve, the time grid), and what the
+CoxPH baseline-hazard fit needs from the train split alone (the time
+column's distinct count and range), are computed once per dataset, not once
+per model.
 """
 
 from __future__ import annotations
@@ -48,6 +50,7 @@ class SurvDataset:
         # Hyperband trials score concurrently from a thread pool
         self._scoring_lock = threading.Lock()
         self._scoring_stats: tuple[tuple[list[float], list[float]], float, float] | None = None
+        self._train_time_stats: tuple[int, float | None, float | None] | None = None
 
     @property
     def in_features(self) -> int:
@@ -90,6 +93,25 @@ class SurvDataset:
                 self._scoring_stats = (censoring, float(row["lo"]), float(row["hi"]))
         censoring, lo, hi = self._scoring_stats
         return censoring, np.linspace(lo, hi, n_grid).tolist()
+
+    def train_time_stats(self) -> tuple[int, float | None, float | None]:
+        """``(distinct count, min, max)`` of the train split's time column
+        as double — the statistics ``km.quantize_times`` coarsens by.
+
+        Computed in one aggregate on first use (under the scoring lock, so
+        concurrent fits wait for one computation) and reused by every later
+        fit on this dataset.
+        """
+        with self._scoring_lock:
+            if self._train_time_stats is None:
+                t = F.col(self.time_column).cast("double")
+                row = self.train_df.agg(
+                    F.countDistinct(t).alias("nd"),
+                    F.min(t).alias("lo"),
+                    F.max(t).alias("hi"),
+                ).first()
+                self._train_time_stats = (int(row["nd"]), row["lo"], row["hi"])
+        return self._train_time_stats
 
     def train_numpy(self):
         return self.to_numpy(self.train_df)

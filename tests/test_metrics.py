@@ -5,6 +5,8 @@ product-limit, Harrell/Antolini concordance, Graf IPCW Brier)."""
 
 from __future__ import annotations
 
+import uuid
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -925,9 +927,9 @@ def test_concordance_td_by_no_comparable_pairs_group(spark):
 
 
 def test_concordance_td_exact_matches_pairwise_both_modes(spark, surv_pdf):
-    """concordance_td_exact (per-cut bucketed decomposition — the 100 TB
-    Antolini path) is bit-identical to the O(n²) pairwise form, in both
-    the pairwise and the bucketed Harrell kernels."""
+    """concordance_td_exact (the per-cut decomposition as one grouped
+    Harrell pass keyed by cut — the 100 TB Antolini path) is bit-identical
+    to the O(n²) pairwise form, in both grouped kernels."""
     from elastic_surv_spark.metrics.concordance import (
         concordance_td,
         concordance_td_exact,
@@ -943,7 +945,7 @@ def test_concordance_td_exact_matches_pairwise_both_modes(spark, surv_pdf):
     df = spark.createDataFrame(pdf)
 
     want = concordance_td(df, "t", "e", "surv", cuts)  # below sample gate
-    for mode in ("pairwise", "bucketed"):
+    for mode in ("grouped_map", "bucketed"):
         comp, conc, tied, cidx = concordance_td_exact(
             df, "t", "e", "surv", cuts, mode=mode
         )
@@ -964,9 +966,94 @@ def test_concordance_td_exact_before_first_cut_all_tied(spark):
         (25.0, 0, [0.7, 0.2]),
     ]
     df = spark.createDataFrame(rows, "t double, e int, surv array<double>")
-    comp, conc, tied, cidx = concordance_td_exact(df, "t", "e", "surv", cuts)
-    assert (comp, conc, tied) == (2, 0, 2)
-    assert cidx == 0.5
+    for mode in ("auto", "bucketed"):
+        comp, conc, tied, cidx = concordance_td_exact(
+            df, "t", "e", "surv", cuts, mode=mode
+        )
+        assert (comp, conc, tied) == (2, 0, 2), mode
+        assert cidx == 0.5
+
+
+def _jobs_started(spark, fn) -> int:
+    """Spark jobs started while ``fn()`` ran, read from the status tracker
+    under a job group of their own (after the listener bus drained)."""
+    sc = spark.sparkContext
+    group = f"test-jobs-started-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_concordance_td_exact_jobs_do_not_grow_with_cuts(spark):
+    """One grouped Harrell pass covers every occupied cut: 3 and 9
+    occupied cuts start the same number of Spark jobs."""
+    from elastic_surv_spark.metrics.concordance import concordance_td_exact
+
+    rng = np.random.default_rng(5)
+    n = 90
+    rows = [
+        (float(i + 1), 1, np.sort(rng.uniform(0.1, 1.0, 9))[::-1].round(2).tolist())
+        for i in range(n)
+    ]
+    df = spark.createDataFrame(rows, "t double, e int, surv array<double>").cache()
+    df.count()
+    try:
+        counts = {}
+        for k in (3, 9):
+            cuts = [float(c) for c in np.linspace(1, n, k + 1)[:-1]]
+            counts[k] = _jobs_started(
+                spark,
+                lambda: concordance_td_exact(
+                    df, "t", "e", "surv", cuts + [1e9] * (9 - k)
+                ),
+            )
+        assert counts[3] == counts[9] > 0, counts
+    finally:
+        df.unpersist()
+
+
+def test_concordance_td_kernels_agree_on_null_rows(spark):
+    """Rows with a NULL time or NULL curve drop up front in every kernel:
+    the pairwise join, the exact decomposition and the grouped form all
+    give the clean frame's answer (the pairwise join used to count a
+    NULL-curve event as a comparable, discordant pair)."""
+    from elastic_surv_spark.metrics.concordance import (
+        concordance_td,
+        concordance_td_by,
+        concordance_td_exact,
+    )
+
+    cuts = [1.0, 2.0]
+    clean = [(1.0, 1, [0.3, 0.2]), (2.0, 1, [0.6, 0.5]), (3.0, 0, [0.9, 0.8])]
+    dirty = clean + [(2.5, 1, None), (4.0, 0, None), (None, 1, [0.5, 0.3])]
+    schema = "t double, e int, surv array<double>"
+    for rows in (clean, dirty):
+        df = spark.createDataFrame(rows, schema)
+        pairwise = concordance_td(df, "t", "e", "surv", cuts, mode="pairwise")
+        _, _, _, exact = concordance_td_exact(df, "t", "e", "surv", cuts)
+        by = concordance_td_by(
+            df.withColumn("g", F.lit(0)), "g", "t", "e", "surv", cuts
+        ).first()["c_index"]
+        assert pairwise == exact == by == 1.0, (len(rows), pairwise, exact, by)
+
+
+def test_concordance_unknown_mode_raises(spark):
+    from elastic_surv_spark.metrics.concordance import (
+        concordance_td_exact,
+        harrell_cindex_counts,
+    )
+
+    df = spark.createDataFrame(
+        [(1.0, 1, 0.5, [0.5])], "t double, e int, r double, surv array<double>"
+    )
+    with pytest.raises(ValueError, match="unknown mode"):
+        harrell_cindex_counts(df, "t", "e", "r", mode="bogus")
+    with pytest.raises(ValueError, match="unknown mode"):
+        concordance_td_exact(df, "t", "e", "surv", [1.0], mode="bogus")
 
 
 def test_harrell_cindex_by_drops_null_time_and_risk(spark):

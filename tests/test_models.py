@@ -201,6 +201,48 @@ def test_score_releases_prediction_frame_when_a_metric_raises(spark, dataset, mo
     assert jsc.getPersistentRDDs().size() == before
 
 
+def test_cox_time_stats_computed_once_per_dataset(spark, monkeypatch):
+    # the quantization statistics of the Breslow curve depend on the train
+    # split alone: two CoxPH fits on one dataset run one distinct count
+    from pyspark.sql import functions as F
+
+    calls = []
+    real = F.countDistinct
+
+    def counting(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(F, "countDistinct", counting)
+    ds = SurvDataset(SurvFrame.from_pandas(spark, gbsg2_like(200), "time", "cens"))
+    fits = [
+        CoxPHModel(in_features=ds.in_features, epochs=1, patience=1, seed=seed)
+        for seed in (1, 2)
+    ]
+    for model in fits:
+        model.train(ds)
+    assert len(calls) == 1
+    assert all(len(m.cuts) == len(m.baseline_cumhaz) > 0 for m in fits)
+
+
+def test_breslow_running_sum_matches_spark_window(spark):
+    # the Breslow cumulative sums run on the driver over the collected
+    # curve; they keep the SQL running-window semantics they replaced:
+    # NULLs skipped, NULL before the first value, Spark's addition order
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from elastic_surv_spark.models.cox_ph import _running_sum
+
+    vals = [None, -0.0, None, 0.1, 0.2, 1e-17, None, 3.0, -2.5]
+    df = spark.createDataFrame(list(enumerate(vals)), "i int, v double")
+    w = Window.orderBy("i").rowsBetween(Window.unboundedPreceding, 0)
+    want = [
+        r["s"] for r in df.select("i", F.sum("v").over(w).alias("s")).orderBy("i").collect()
+    ]
+    assert [repr(v) for v in _running_sum(vals)] == [repr(v) for v in want]
+
+
 def test_mlp_block_order_matches_mlpvanilla():
     # torchtuples DenseVanillaBlock: Linear -> activation -> BatchNorm -> Dropout
     from elastic_surv_spark.models.nn import MLP, BatchNorm1d, Dense, Dropout, ReLU
@@ -213,8 +255,8 @@ def test_mlp_block_order_matches_mlpvanilla():
 def test_cox_baseline_curve_bounded_continuous_times(spark):
     # VERDICT r6 "What's wrong #2": with continuous float times, distinct
     # training times ≈ n, and the Breslow baseline-hazard curve must be
-    # quantized DISTRIBUTEDLY to ≤ max_curve_points before the window
-    # cum-sums and the collect — never a driver-side O(n) pull.
+    # quantized DISTRIBUTEDLY to ≤ max_curve_points before the groupBy
+    # aggregate and its collect — never a driver-side O(n) pull.
     pdf = gbsg2_like().copy()
     rng = np.random.default_rng(7)
     pdf["time"] = pdf["time"].astype(float) + rng.uniform(0.0, 0.999, len(pdf))
