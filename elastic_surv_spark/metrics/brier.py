@@ -11,30 +11,41 @@ src/elastic_surv/models/base.py:75-81, delegated to pycox). Definition
 where G is the KM estimate of the *censoring* distribution (event flipped).
 IBS = ∫ BS(τ) dτ / (τ_max − τ_min), trapezoidal over the grid.
 
-Plan shape: only the prediction depends on the model, so the work that
-does not is done once, in Python or per row, never per (row, τ) pair:
+Plan shape: two kernels compute the same numbers.
 
-- the censoring curve G is a KM aggregate (tiny) collected by
-  :func:`censoring_km`; ``SurvModel.score`` takes it, and the τ grid, from
-  the dataset, which computes both once per test split;
-- each grid point is looked up in Python: its G(τ_k) and the index of
-  the last cut ≤ τ_k (``bisect`` over the sorted lists). They ship with τ_k
-  in ONE SQL-text array-of-structs literal, exploded against the rows;
-- G(T_i⁻) depends only on the row, so it is resolved once per row, before
-  the explode; after it S_i(τ_k) is a plain ``element_at(surv, idx_k)``,
-  with no lambda in the N × |grid| expansion;
-- one global aggregate per grid point finishes the job; its |grid| rows
-  are collected, ordered and integrated in Python.
+- :func:`integrated_brier_score_local` runs on the driver over the
+  collected prediction rows, the path ``SurvModel.score`` takes while the
+  test split has at most ``concordance.EXACT_THRESHOLD`` rows (the collect
+  is bounded at that many rows × |cuts| doubles, 16 MB at 100 cuts). G(τ_k)
+  and the cut index of τ_k are looked up once per grid point, G(T_i⁻) once
+  per row (``searchsorted``), and each BS(τ_k) is one ``math.fsum`` over
+  the rows, so the result does not depend on the row order.
+- :func:`brier_curve` / :func:`integrated_brier_score` are the Spark plan
+  for larger splits. Only the prediction depends on the model, so the work
+  that does not is done once, in Python or per row, never per (row, τ)
+  pair: the censoring curve G is a KM aggregate (tiny) collected by
+  :func:`censoring_km` (``SurvModel.score`` takes it, and the τ grid, from
+  the dataset, which computes both once per test split); each grid point's
+  G(τ_k) and cut index ship with τ_k in ONE SQL-text array-of-structs
+  literal, exploded against the rows; G(T_i⁻) is resolved once per row
+  before the explode, so S_i(τ_k) is a plain ``element_at(surv, idx_k)``;
+  one global aggregate per grid point finishes the job, and its |grid|
+  rows are collected, ordered and integrated in Python. The N-row scan and
+  its expansion are map-only; the per-τ aggregate is the one shuffle.
 
-The N-row scan and its expansion are map-only; the per-τ aggregate is the
-one shuffle (the KM curve adds its own, once per dataset). Terms with
-G ≤ 0 are dropped (standard IPCW convention).
+Both integrate with the same trapezoid routine. Rows with a NULL time or
+NULL curve are dropped up front (the convention of the concordance
+kernels): they neither add a term nor count in the 1/N. Terms with G ≤ 0
+are dropped (standard IPCW convention).
 """
 
 from __future__ import annotations
 
+import math
 from bisect import bisect_right
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -105,8 +116,10 @@ def brier_curve(
     ``surv_col`` holds each subject's predicted survival at the sorted
     ``cuts`` (S(τ) = surv[last cut ≤ τ], 1.0 before the first cut);
     ``censoring`` is the ``(ts, gs)`` pair :func:`censoring_km` returns.
+    Rows with a NULL time or NULL curve are dropped before the 1/N.
     """
     ts, gs = censoring
+    pred = pred.where(F.col(time_col).isNotNull() & F.col(surv_col).isNotNull())
     points = ", ".join(
         f"named_struct('k', {k}, 'tau', {double_sql(tau)}, "
         f"'g_tau', {double_sql(_step_at(ts, gs, tau))}, "
@@ -150,14 +163,71 @@ def integrated_brier_score(
         brier_curve(pred, time_col, event_col, surv_col, cuts, grid, censoring).collect(),
         key=lambda r: r["k"],
     )
-    bs = [float(r["brier"]) for r in rows]
-    taus = [float(r["tau"]) for r in rows]
+    return _trapezoid([float(r["tau"]) for r in rows], [float(r["brier"]) for r in rows])
+
+
+def _trapezoid(taus: list[float], bs: list[float]) -> float:
+    """∫ BS(τ) dτ / (τ_max − τ_min) over the grid, trapezoidal, summed in
+    grid order; NaN when the grid spans no time."""
     if len(bs) < 2 or taus[-1] == taus[0]:
         return float("nan")
     area = 0.0
     for i in range(len(bs) - 1):
         area += 0.5 * (bs[i] + bs[i + 1]) * (taus[i + 1] - taus[i])
     return area / (taus[-1] - taus[0])
+
+
+def prediction_arrays(
+    pdf: pd.DataFrame, time_col: str, event_col: str, surv_col: str, n_cuts: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """``(t, e, S)`` float arrays of a collected prediction frame, ``S`` of
+    shape (rows, ``n_cuts``), without the rows whose time or curve is
+    NULL (a NaN time reads as NULL: the collect cannot tell them apart)."""
+    keep = pdf[time_col].notna() & pdf[surv_col].notna()
+    pdf = pdf[keep]
+    t = pdf[time_col].to_numpy(dtype=float)
+    e = pdf[event_col].to_numpy(dtype=float)
+    if len(pdf):
+        S = np.stack([np.asarray(s, dtype=float) for s in pdf[surv_col]])
+    else:
+        S = np.empty((0, n_cuts))
+    return t, e, S
+
+
+def integrated_brier_score_local(
+    pdf: pd.DataFrame,
+    time_col: str,
+    event_col: str,
+    surv_col: str,
+    cuts: list[float],
+    grid: list[float],
+    censoring: tuple[list[float], list[float]],
+) -> float:
+    """:func:`integrated_brier_score` over a prediction frame collected to
+    the driver (``toPandas``), in numpy: the same terms, each BS(τ) an
+    exactly rounded ``math.fsum`` over the rows, so the value does not
+    depend on the row order and differs from the Spark kernel only by that
+    kernel's summation order."""
+    ts, gs = censoring
+    t, e, S = prediction_arrays(pdf, time_col, event_col, surv_col, len(cuts))
+    n = len(t)
+    if n == 0:
+        return float("nan")
+    # G(T_i⁻): the last censoring step strictly before T_i, 1.0 before any
+    g_tminus = np.concatenate([[1.0], gs])[np.searchsorted(ts, t, side="left")]
+    event = e == 1
+    bs = []
+    with np.errstate(divide="ignore", invalid="ignore"):
+        for tau in grid:
+            sidx = bisect_right(cuts, tau)
+            s_tau = S[:, sidx - 1] if sidx > 0 else np.ones(n)
+            g_tau = _step_at(ts, gs, tau)
+            term_event = np.where(
+                (t <= tau) & event & (g_tminus > 0), s_tau**2 / g_tminus, 0.0
+            )
+            term_alive = np.where((t > tau) & (g_tau > 0), (1 - s_tau) ** 2 / g_tau, 0.0)
+            bs.append(math.fsum(term_event + term_alive) / n)
+    return _trapezoid(list(grid), bs)
 
 
 def ipcw_brier_km_by(

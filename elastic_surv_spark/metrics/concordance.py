@@ -34,8 +34,11 @@ comparison made by an event subject at cut index g reads the scalar
 ``surv[g]``, so the pairs split into one Harrell count per occupied cut.
 ``concordance_td_exact`` runs all of them as ONE grouped Harrell pass keyed
 by cut (each row exploded into the occupied cuts at or before its own), so
-its Spark job count does not grow with the number of cuts. Rows with a NULL
-time or curve drop up front in every td kernel.
+its Spark job count does not grow with the number of cuts.
+``concordance_td_local`` is the same decomposition in numpy over predictions
+collected to the driver — what ``SurvModel.score`` runs on test splits of at
+most :data:`EXACT_THRESHOLD` rows. Rows with a NULL time or curve drop up
+front in every td kernel.
 """
 
 from __future__ import annotations
@@ -46,11 +49,22 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from elastic_surv_spark.functions.literals import double_array
-from elastic_surv_spark.metrics.brier import step_value
+from elastic_surv_spark.metrics.brier import prediction_arrays, step_value
+
+#: the ungrouped auto switch (``harrell_cindex_counts``, ``concordance_td``):
+#: the pairwise kernel while the frame has at most this many rows, the
+#: linear-shuffle exact kernel above. ``SurvModel.score`` reads it too: up
+#: to this many test rows it collects the predictions and scores on the
+#: driver (:func:`concordance_td_local`)
+EXACT_THRESHOLD = 20_000
 
 #: ``harrell_cindex_by``'s auto switch: grouped_map while the largest group
 #: has at most this many rows, bucketed above
 GROUPED_EXACT_THRESHOLD = 200_000
+
+#: elements per boolean block of :func:`concordance_td_local`'s
+#: same-cut comparisons (4 MB per block array)
+_LOCAL_BLOCK = 1 << 22
 
 
 def _pairwise_counts(df: DataFrame) -> DataFrame:
@@ -252,7 +266,7 @@ def harrell_cindex_counts(
     sample_frac: float | None = None,
     seed: int = 42,
     mode: str = "auto",
-    exact_threshold: int = 20_000,
+    exact_threshold: int = EXACT_THRESHOLD,
     cache_input: bool = True,
 ) -> DataFrame:
     """One row: (n_comparable, n_concordant, n_tied, c_index rounded 6).
@@ -911,7 +925,7 @@ def concordance_td(
     event_col: str,
     surv_col: str,
     cuts: list[float],
-    exact_threshold: int = 20_000,
+    exact_threshold: int = EXACT_THRESHOLD,
     seed: int = 42,
     mode: str = "auto",
 ) -> float:
@@ -938,6 +952,12 @@ def concordance_td(
     Rows with a NULL time or NULL curve drop up front in every mode (the
     missing-value convention of every concordance kernel), so the answer
     does not depend on which side of the switch the frame falls.
+
+    ``SurvModel.score`` calls this only above :data:`EXACT_THRESHOLD` test
+    rows, with ``mode="exact"`` (it knows the size, so no probe count).
+    Below it, it collects the predictions (at most that many rows × |cuts|
+    doubles) and counts them with :func:`concordance_td_local`, which
+    gives the pairwise value bit for bit.
 
     The curve lookup S(t) = surv[max {k : cuts[k] <= t}] is a JVM-side
     higher-order expression evaluated once per event row, at its own T_i;
@@ -984,3 +1004,60 @@ def concordance_td(
     if row["n"] == 0:
         return float("nan")
     return float((row["conc"] + 0.5 * row["tied"]) / row["n"])
+
+
+def concordance_td_local(
+    pdf: pd.DataFrame,
+    time_col: str,
+    event_col: str,
+    surv_col: str,
+    cuts: list[float],
+) -> tuple[int, int, int]:
+    """:func:`concordance_td` over a prediction frame collected to the
+    driver (``toPandas``): the exact ``(comparable, concordant, tied)``
+    Antolini pair counts, so ``(concordant + 0.5·tied) / comparable`` is
+    the pairwise kernel's value bit for bit. Rows with a NULL time or NULL
+    curve are dropped, as in every kernel.
+
+    The per-cut decomposition of :func:`concordance_td_exact`, in numpy:
+    an event subject i at cut index g (cuts[g] ≤ T_i < cuts[g+1]; −1 before
+    the first cut, where S ≡ 1) compares surv[g] of itself and of each
+    partner. Partners at a later cut index have T_j > T_i by construction,
+    so their counts are two ``searchsorted`` calls into the sorted values
+    of those rows; partners at the same cut index are compared in boolean
+    blocks of at most ``_LOCAL_BLOCK`` elements. Work is O(|cuts| · n log n)
+    plus the same-cut pairs; memory is the n × |cuts| curves plus a few
+    blocks, never an n × n array. Each cut's values become dense integer
+    ranks first, so they compare as Spark compares doubles (NaN equal to
+    itself and above every number, −0.0 equal to 0.0).
+    """
+    t, e, S = prediction_arrays(pdf, time_col, event_col, surv_col, len(cuts))
+    n = len(t)
+    gidx = np.searchsorted(np.asarray(cuts, dtype=float), t, side="right") - 1
+    event = e == 1
+    comparable = concordant = tied = 0
+    for g in np.unique(gidx[event]):
+        at, later = gidx == g, gidx > g
+        ev = np.flatnonzero(at & event)
+        vals = S[:, g] if g >= 0 else np.ones(n)
+        rank = np.zeros(n, dtype=np.int64)
+        rank[gidx >= g] = np.unique(vals[gidx >= g], return_inverse=True)[1]
+        r_ev = rank[ev]
+        # partners at a later cut: all of them are later in time
+        r_later = np.sort(rank[later])
+        above = np.searchsorted(r_later, r_ev, side="right")
+        below = np.searchsorted(r_later, r_ev, side="left")
+        comparable += len(ev) * len(r_later)
+        concordant += int((len(r_later) - above).sum())
+        tied += int((above - below).sum())
+        # partners at the same cut: those with T_j > T_i, one block at a time
+        same = np.flatnonzero(at)
+        t_same, r_same = t[same], rank[same]
+        step = max(1, _LOCAL_BLOCK // len(same))
+        for lo in range(0, len(ev), step):
+            i = ev[lo : lo + step]
+            pair = t_same[None, :] > t[i][:, None]
+            comparable += int(pair.sum())
+            concordant += int((pair & (r_same[None, :] > rank[i][:, None])).sum())
+            tied += int((pair & (r_same[None, :] == rank[i][:, None])).sum())
+    return comparable, concordant, tied

@@ -5,7 +5,12 @@
 / ``predict`` / ``score``. ``score`` reproduces base.py:61-82: predictions on
 the test split → Antolini time-dependent concordance + integrated Brier
 score over a 100-point linspace(t_min, t_max) grid, censoring via KM
-(:func:`score_model`, shared with the AFT baseline).
+(:func:`score_model`, shared with the AFT baseline). Like the reference,
+which scores driver arrays with pycox's ``EvalSurv``, a test split of at
+most ``concordance.EXACT_THRESHOLD`` rows (20,000) is scored on the
+driver: one Spark job runs the inference and collects the predictions
+(at most that many rows × |cuts| doubles, 16 MB at 100 cuts), and numpy
+kernels compute both metrics. Larger splits are scored in Spark.
 
 Training paths:
 - ``local``   — exact reference semantics: sequential mini-batches, Adam,
@@ -19,7 +24,8 @@ Training paths:
   reference's batched losses.
 
 Inference is always distributed: broadcast weights, ``mapInPandas`` forward
-pass, survival curves as array columns.
+pass, survival curves as array columns. The local path's ``(X, t, e)``
+arrays are collected once per dataset and shared, read-only, by every fit.
 """
 
 from __future__ import annotations
@@ -32,8 +38,12 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from elastic_surv_spark.metrics.brier import integrated_brier_score
-from elastic_surv_spark.metrics.concordance import concordance_td
+from elastic_surv_spark.metrics import concordance
+from elastic_surv_spark.metrics.brier import (
+    integrated_brier_score,
+    integrated_brier_score_local,
+)
+from elastic_surv_spark.metrics.concordance import concordance_td, concordance_td_local
 from elastic_surv_spark.models.data import SurvDataset
 from elastic_surv_spark.models.nn import MLP, Adam
 from elastic_surv_spark.models.params import Params
@@ -276,14 +286,22 @@ class SurvModel(ABC):
         time-dependent concordance and the integrated Brier score over
         ``linspace(t_min, t_max, n_grid)``, censoring by Kaplan-Meier.
 
-        Only the prediction frame depends on the model. The censoring curve
-        and the grid depend on the test split alone, so they come from
-        ``dataset.scoring_reference``, which computes them once however many
-        models (or concurrent Hyperband trials) score on the dataset. Inside
-        the metrics, the per-τ lookups (G(τ_k), the cut index of τ_k) are
-        resolved in Python and G(T_i⁻) once per row, so the row × grid
-        expansion is plain array indexing. The prediction frame is cached
-        for the two metrics and released even when one of them raises.
+        Only the predictions depend on the model. The censoring curve, the
+        grid and the test split's size depend on the split alone, so they
+        come from the dataset, which computes them once however many models
+        (or concurrent Hyperband trials) score on it.
+
+        Up to ``concordance.EXACT_THRESHOLD`` test rows, one Spark job runs
+        the inference and collects the ``(T, E, surv)`` rows (Arrow; at most
+        that many rows × |cuts| doubles, 16 MB at 100 cuts), and
+        :func:`~elastic_surv_spark.metrics.concordance.concordance_td_local`
+        and :func:`~elastic_surv_spark.metrics.brier.integrated_brier_score_local`
+        score them in numpy: the C-index equals the pairwise Spark kernel's
+        bit for bit, and each BS(τ) is an exactly rounded sum, so neither
+        depends on the partitioning. Above it the prediction frame is cached
+        for the exact Spark C-index and the Spark IBS, and released even
+        when one of them raises. Rows with a NULL time or curve are left out
+        on both paths.
         """
         return score_model(self, dataset, n_grid)
 
@@ -309,9 +327,17 @@ def score_model(model, dataset: SurvDataset, n_grid: int = 100) -> dict[str, flo
     cuts = [float(c) for c in model.cuts]
     pred = model.predict(
         dataset.test_df, id_cols=[t_col, e_col], features=dataset.features
-    ).cache()
+    )
+    if dataset.test_rows() <= concordance.EXACT_THRESHOLD:
+        pdf = pred.toPandas()
+        comparable, concordant, tied = concordance_td_local(pdf, t_col, e_col, "surv", cuts)
+        c_index = (concordant + 0.5 * tied) / comparable if comparable else float("nan")
+        brier = integrated_brier_score_local(pdf, t_col, e_col, "surv", cuts, grid, censoring)
+        return {"c_index": float(c_index), "brier_score": float(brier)}
+    pred = pred.cache()
     try:
-        c_index = concordance_td(pred, t_col, e_col, "surv", cuts)
+        # the size is known: no probe count before the exact kernel
+        c_index = concordance_td(pred, t_col, e_col, "surv", cuts, mode="exact")
         brier = integrated_brier_score(pred, t_col, e_col, "surv", cuts, grid, censoring)
     finally:
         pred.unpersist()

@@ -7,9 +7,10 @@ the full frame (fixing the reference's refit-per-copy waste), the transform
 is a lazy column expression fused into every downstream plan by Catalyst,
 and the split DataFrames are cached — the reference re-pulled every batch
 from ES every epoch (SURVEY §4 'Caching / reuse'). What scoring needs from
-the test split alone (the censoring curve, the time grid), and what the
-CoxPH baseline-hazard fit needs from the train split alone (the time
-column's distinct count and range), are computed once per dataset, not once
+the test split alone (the censoring curve, the time grid, the row count),
+what the CoxPH baseline-hazard fit needs from the train split alone (the
+time column's distinct count and range), and the local training path's
+``(X, t, e)`` arrays of each split are computed once per dataset, not once
 per model.
 """
 
@@ -49,8 +50,12 @@ class SurvDataset:
             self.test_df = self.test_df.cache()
         # Hyperband trials score concurrently from a thread pool
         self._scoring_lock = threading.Lock()
-        self._scoring_stats: tuple[tuple[list[float], list[float]], float, float] | None = None
+        self._scoring_stats: (
+            tuple[tuple[list[float], list[float]], float, float, int] | None
+        ) = None
         self._train_time_stats: tuple[int, float | None, float | None] | None = None
+        # split name -> (label transformer the arrays were made with, arrays)
+        self._numpy: dict[str, tuple[object, tuple[np.ndarray, ...]]] = {}
 
     @property
     def in_features(self) -> int:
@@ -71,6 +76,25 @@ class SurvDataset:
             t, e = self.frame.label_transformer(t, e)
         return X, t, e
 
+    def _test_stats(self) -> tuple[tuple[list[float], list[float]], float, float, int]:
+        """``(censoring, min T, max T, rows with a time)`` of the test split:
+        the censoring KM and one aggregate, computed on first use (under a
+        lock, so concurrent scorers wait for one computation)."""
+        with self._scoring_lock:
+            if self._scoring_stats is None:
+                t = self.time_column
+                censoring = brier.censoring_km(
+                    self.test_df, t, self.event_column,
+                    max_curve_points=CENSORING_CURVE_POINTS,
+                )
+                row = self.test_df.agg(
+                    F.min(t).alias("lo"), F.max(t).alias("hi"), F.count(t).alias("n")
+                ).first()
+                self._scoring_stats = (
+                    censoring, float(row["lo"]), float(row["hi"]), int(row["n"])
+                )
+        return self._scoring_stats
+
     def scoring_reference(
         self, n_grid: int = 100
     ) -> tuple[tuple[list[float], list[float]], list[float]]:
@@ -79,20 +103,16 @@ class SurvDataset:
         ``linspace(min T, max T, n_grid)`` time grid.
 
         Both depend on the test split alone: the curve and the time range
-        are computed on first use (under a lock, so concurrent scorers wait
-        for one computation) and reused by every later call.
+        are computed once per dataset and reused by every later call.
         """
-        with self._scoring_lock:
-            if self._scoring_stats is None:
-                t = self.time_column
-                censoring = brier.censoring_km(
-                    self.test_df, t, self.event_column,
-                    max_curve_points=CENSORING_CURVE_POINTS,
-                )
-                row = self.test_df.agg(F.min(t).alias("lo"), F.max(t).alias("hi")).first()
-                self._scoring_stats = (censoring, float(row["lo"]), float(row["hi"]))
-        censoring, lo, hi = self._scoring_stats
+        censoring, lo, hi, _ = self._test_stats()
         return censoring, np.linspace(lo, hi, n_grid).tolist()
+
+    def test_rows(self) -> int:
+        """Rows of the test split with a non-NULL time — the size the
+        scoring kernels see. Counted in the aggregate that gives
+        :meth:`scoring_reference` its time range, so it adds no job."""
+        return self._test_stats()[3]
 
     def train_time_stats(self) -> tuple[int, float | None, float | None]:
         """``(distinct count, min, max)`` of the train split's time column
@@ -113,8 +133,24 @@ class SurvDataset:
                 self._train_time_stats = (int(row["nd"]), row["lo"], row["hi"])
         return self._train_time_stats
 
+    def _split_numpy(self, split: str) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+        """:meth:`to_numpy` of one split, collected on first use (under the
+        scoring lock: Hyperband fits run concurrently) and again only if the
+        frame's label transformer changes. Every fit shares the arrays, so
+        they are read-only: a model writing into them fails loudly."""
+        with self._scoring_lock:
+            hook = self.frame.label_transformer
+            cached = self._numpy.get(split)
+            if cached is None or cached[0] is not hook:
+                df = self.train_df if split == "train" else self.test_df
+                arrays = self.to_numpy(df)
+                for a in arrays:
+                    a.setflags(write=False)
+                cached = self._numpy[split] = (hook, arrays)
+        return cached[1]
+
     def train_numpy(self):
-        return self.to_numpy(self.train_df)
+        return self._split_numpy("train")
 
     def test_numpy(self):
-        return self.to_numpy(self.test_df)
+        return self._split_numpy("test")

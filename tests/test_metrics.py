@@ -1056,6 +1056,79 @@ def test_concordance_unknown_mode_raises(spark):
         concordance_td_exact(df, "t", "e", "surv", [1.0], mode="bogus")
 
 
+def test_driver_kernels_agree_with_spark_kernels(spark):
+    """The numpy kernels ``score`` runs below the switch give the Spark
+    kernels' answers: the C-index equal (==) to the pairwise join and, as
+    counts, to the exact decomposition; the IBS within 1e-12 of the Spark
+    aggregate and of the numpy reference. The data has time ties, curve
+    ties, events before the first cut, and NULL-time and NULL-curve rows."""
+    from elastic_surv_spark.metrics.brier import integrated_brier_score_local
+    from elastic_surv_spark.metrics.concordance import (
+        concordance_td_exact,
+        concordance_td_local,
+    )
+
+    rng = np.random.default_rng(11)
+    n = 160
+    cuts = [3.0, 6.0, 9.0, 12.0, 15.0]
+    t = rng.integers(0, 20, n).astype(float)  # ties, and times before cuts[0]
+    e = rng.binomial(1, 0.6, n)
+    surv = np.minimum.accumulate(rng.uniform(0.0, 1.0, (n, len(cuts))), axis=1).round(1)
+    rows = [(float(a), int(b), c.tolist()) for a, b, c in zip(t, e, surv)]
+    assert any(a < cuts[0] and b == 1 for a, b, _ in rows)
+    rows += [(4.0, 1, None), (7.0, 0, None), (None, 1, [0.5] * len(cuts))]
+    df = spark.createDataFrame(rows, "t double, e int, surv array<double>")
+    pdf = df.toPandas()
+
+    comparable, concordant, tied = concordance_td_local(pdf, "t", "e", "surv", cuts)
+    assert tied > 0
+    c_local = (concordant + 0.5 * tied) / comparable
+    assert c_local == concordance_td(df, "t", "e", "surv", cuts, mode="pairwise")
+    assert (comparable, concordant, tied) == concordance_td_exact(
+        df, "t", "e", "surv", cuts
+    )[:3]
+    assert round(c_local, 6) == concordance_td(df, "t", "e", "surv", cuts, mode="exact")
+
+    clean = df.where(F.col("t").isNotNull() & F.col("surv").isNotNull())
+    censoring = censoring_km(clean, "t", "e")
+    grid = np.linspace(t.min(), t.max(), 25).tolist()
+    ibs_local = integrated_brier_score_local(pdf, "t", "e", "surv", cuts, grid, censoring)
+    ibs_spark = integrated_brier_score(df, "t", "e", "surv", cuts, grid, censoring)
+    want = np_ipcw_brier(t, e, np.array(cuts), surv, grid)
+    want_ibs = np.trapz(want, grid) / (grid[-1] - grid[0])
+    assert abs(ibs_local - ibs_spark) < 1e-12
+    assert abs(ibs_local - want_ibs) < 1e-12
+
+
+def test_ibs_drops_null_rows(spark):
+    """A row with a NULL time or NULL curve adds no Brier term, so it must
+    not count in the 1/N either (it used to lower the score by N/(N+2))."""
+    from elastic_surv_spark.metrics.brier import integrated_brier_score_local
+
+    cuts = [2.0, 5.0, 8.0]
+    clean = [
+        (1.0, 1, [0.8, 0.5, 0.2]),
+        (3.0, 0, [0.9, 0.7, 0.4]),
+        (4.0, 1, [0.7, 0.4, 0.1]),
+        (6.0, 1, [0.95, 0.8, 0.6]),
+        (9.0, 0, [0.9, 0.6, 0.3]),
+    ]
+    dirty = clean + [(5.0, 1, None), (None, 0, [0.5, 0.4, 0.3])]
+    schema = "t double, e int, surv array<double>"
+    censoring = censoring_km(spark.createDataFrame(clean, schema), "t", "e")
+    grid = np.linspace(1.0, 9.0, 10).tolist()
+    got = []
+    for rows in (clean, dirty):
+        df = spark.createDataFrame(rows, schema)
+        got.append(integrated_brier_score(df, "t", "e", "surv", cuts, grid, censoring))
+        got.append(
+            integrated_brier_score_local(
+                df.toPandas(), "t", "e", "surv", cuts, grid, censoring
+            )
+        )
+    assert max(got) - min(got) < 1e-12, got
+
+
 def test_harrell_cindex_by_drops_null_time_and_risk(spark):
     """The EVERY-mode NULL convention (harrell_cindex_counts) applies to
     the grouped twin: NULL time/risk rows are excluded, not swept as NaN

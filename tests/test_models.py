@@ -158,10 +158,11 @@ def test_aft_baseline_scores(dataset):
 
 def test_score_equals_fresh_metric_calls(dataset):
     # score() takes the censoring curve and grid from the dataset; the same
-    # two metrics computed anew on a fresh prediction frame, with a
-    # fresh censoring_km, must agree exactly
-    from elastic_surv_spark.metrics.brier import censoring_km, integrated_brier_score
-    from elastic_surv_spark.metrics.concordance import concordance_td
+    # two driver kernels run anew on freshly collected predictions, with a
+    # fresh censoring_km, must agree exactly (the Spark kernels are checked
+    # against the driver kernels in test_metrics)
+    from elastic_surv_spark.metrics.brier import censoring_km, integrated_brier_score_local
+    from elastic_surv_spark.metrics.concordance import concordance_td_local
 
     model = LogisticHazardModel(
         in_features=dataset.in_features, epochs=3, patience=3, seed=42
@@ -175,13 +176,37 @@ def test_score_equals_fresh_metric_calls(dataset):
     times = dataset.test_df.select(t).toPandas()[t]
     grid = np.linspace(float(times.min()), float(times.max()), 100).tolist()
     censoring = censoring_km(pred, t, e, max_curve_points=512)
+    pdf = pred.toPandas()
+    comparable, concordant, tied = concordance_td_local(pdf, t, e, "surv", cuts)
     assert scores == {
-        "c_index": concordance_td(pred, t, e, "surv", cuts),
-        "brier_score": integrated_brier_score(pred, t, e, "surv", cuts, grid, censoring),
+        "c_index": (concordant + 0.5 * tied) / comparable,
+        "brier_score": integrated_brier_score_local(pdf, t, e, "surv", cuts, grid, censoring),
     }
 
 
+def test_score_paths_agree(dataset, monkeypatch):
+    # above the switch (set to 0 here) score runs the Spark kernels: the
+    # exact C-index (rounded to 6 digits) and the Spark IBS (its own
+    # summation order) against the driver path's values
+    import elastic_surv_spark.metrics.concordance as concordance
+
+    model = DeepHitModel(in_features=dataset.in_features, epochs=2, patience=2, seed=5)
+    model.train(dataset)
+    driver = model.score(dataset)
+    monkeypatch.setattr(concordance, "EXACT_THRESHOLD", 0)
+    spark_path = model.score(dataset)
+    assert spark_path["c_index"] == round(driver["c_index"], 6)
+    assert abs(spark_path["brier_score"] - driver["brier_score"]) < 1e-12
+
+
+def _persistent_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
 def test_score_releases_prediction_frame_when_a_metric_raises(spark, dataset, monkeypatch):
+    # the distributed path (test splits above the switch; the switch set
+    # to 0 here) caches the prediction frame and must release it
+    import elastic_surv_spark.metrics.concordance as concordance
     import elastic_surv_spark.models.base as base
 
     model = LogisticHazardModel(
@@ -189,16 +214,86 @@ def test_score_releases_prediction_frame_when_a_metric_raises(spark, dataset, mo
     )
     model.train(dataset)
     dataset.scoring_reference()  # per-dataset state settles before counting
-    jsc = spark.sparkContext._jsc
-    before = jsc.getPersistentRDDs().size()
+    before = _persistent_rdds(spark)
 
     def failing_metric(*args, **kwargs):
         raise RuntimeError("metric failed")
 
+    monkeypatch.setattr(concordance, "EXACT_THRESHOLD", 0)
     monkeypatch.setattr(base, "integrated_brier_score", failing_metric)
     with pytest.raises(RuntimeError, match="metric failed"):
         model.score(dataset)
-    assert jsc.getPersistentRDDs().size() == before
+    assert _persistent_rdds(spark) == before
+
+
+def test_score_driver_path_propagates_a_raising_kernel(spark, dataset, monkeypatch):
+    # below the switch nothing is cached: a failing driver kernel
+    # propagates and leaves no RDD persisted
+    import elastic_surv_spark.models.base as base
+
+    model = LogisticHazardModel(
+        in_features=dataset.in_features, epochs=1, patience=1, seed=42
+    )
+    model.train(dataset)
+    dataset.scoring_reference()
+    before = _persistent_rdds(spark)
+
+    def failing_kernel(*args, **kwargs):
+        raise RuntimeError("kernel failed")
+
+    monkeypatch.setattr(base, "integrated_brier_score_local", failing_kernel)
+    with pytest.raises(RuntimeError, match="kernel failed"):
+        model.score(dataset)
+    assert _persistent_rdds(spark) == before
+
+
+def test_score_below_switch_runs_one_spark_job(spark, dataset):
+    # once the per-dataset state has settled, a score below the switch is
+    # the inference and the collect of its predictions: one Spark job
+    from tests.test_metrics import _jobs_started
+
+    model = LogisticHazardModel(
+        in_features=dataset.in_features, epochs=1, patience=1, seed=42
+    )
+    model.train(dataset)
+    dataset.scoring_reference()
+    assert _jobs_started(spark, lambda: model.score(dataset)) == 1
+
+
+def test_score_does_not_depend_on_partitioning(spark):
+    # integer pair counts and exactly rounded per-τ sums: the driver path
+    # gives the same bits however the test split is partitioned
+    ds = SurvDataset(SurvFrame.from_pandas(spark, gbsg2_like(), "time", "cens"))
+    model = DeepHitModel(in_features=ds.in_features, epochs=2, patience=2, seed=3)
+    model.train(ds)
+    test_df = ds.test_df
+    scores = []
+    for layout in (test_df.coalesce(1), test_df.repartition(7)):
+        ds.test_df = layout
+        scores.append(model.score(ds))
+    assert [s["c_index"].hex() for s in scores] == [scores[0]["c_index"].hex()] * 2
+    assert [s["brier_score"].hex() for s in scores] == [scores[0]["brier_score"].hex()] * 2
+
+
+def test_split_arrays_collected_once_and_read_only(spark, monkeypatch):
+    # Hyperband trials fit concurrently on one dataset: each split's
+    # (X, t, e) is collected once and shared, so it is read-only
+    calls = []
+    real = SurvDataset.to_numpy
+
+    def counting(self, df):
+        calls.append(df)
+        return real(self, df)
+
+    monkeypatch.setattr(SurvDataset, "to_numpy", counting)
+    ds = SurvDataset(SurvFrame.from_pandas(spark, gbsg2_like(200), "time", "cens"))
+    for seed in (1, 2):
+        LogisticHazardModel(in_features=ds.in_features, epochs=1, patience=1, seed=seed).train(ds)
+    assert len(calls) == 2  # train and test split, once each
+    X, t, e = ds.train_numpy()
+    for a in (X, t, e):
+        with pytest.raises(ValueError, match="read-only"):
+            a[0] = 0.0
 
 
 def test_cox_time_stats_computed_once_per_dataset(spark, monkeypatch):
