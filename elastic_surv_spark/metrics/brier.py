@@ -14,7 +14,7 @@ IBS = ∫ BS(τ) dτ / (τ_max − τ_min), trapezoidal over the grid.
 Plan shape: two kernels compute the same numbers.
 
 - :func:`integrated_brier_score_local` runs on the driver over the
-  collected prediction rows, the path ``SurvModel.score`` takes while the
+  collected prediction arrays (:func:`prediction_arrays`), the path ``SurvModel.score`` takes while the
   test split has at most ``concordance.EXACT_THRESHOLD`` rows (the collect
   is bounded at that many rows × |cuts| doubles, 16 MB at 100 cuts). G(τ_k)
   and the cut index of τ_k are looked up once per grid point, G(T_i⁻) once
@@ -195,21 +195,20 @@ def prediction_arrays(
 
 
 def integrated_brier_score_local(
-    pdf: pd.DataFrame,
-    time_col: str,
-    event_col: str,
-    surv_col: str,
+    t: np.ndarray,
+    e: np.ndarray,
+    S: np.ndarray,
     cuts: list[float],
     grid: list[float],
     censoring: tuple[list[float], list[float]],
 ) -> float:
-    """:func:`integrated_brier_score` over a prediction frame collected to
-    the driver (``toPandas``), in numpy: the same terms, each BS(τ) an
-    exactly rounded ``math.fsum`` over the rows, so the value does not
-    depend on the row order and differs from the Spark kernel only by that
-    kernel's summation order."""
+    """:func:`integrated_brier_score` over prediction arrays (times ``t``,
+    events ``e``, curves ``S`` of shape (rows, |cuts|), as
+    :func:`prediction_arrays` gives them), in numpy: the same terms, each
+    BS(τ) an exactly rounded ``math.fsum`` over the rows, so the value does
+    not depend on the row order and differs from the Spark kernel only by
+    that kernel's summation order."""
     ts, gs = censoring
-    t, e, S = prediction_arrays(pdf, time_col, event_col, surv_col, len(cuts))
     n = len(t)
     if n == 0:
         return float("nan")

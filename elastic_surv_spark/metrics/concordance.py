@@ -17,9 +17,9 @@ rows. The default is therefore size-gated (``mode="auto"``): below
 algorithm runs — still EXACT (bit-identical counts), but O(n·B) work and
 linear shuffles, built from three disjoint pair classes:
 
-1. same time-bucket        → per-bucket local sweep (applyInPandas)
-2. diff time, same risk-bucket → per-risk-bucket local sweep with a
-   time-bucket histogram (applyInPandas)
+1. same time-bucket        → per-bucket :func:`harrell_counts` (applyInPandas)
+2. diff time, same risk-bucket → per-risk-bucket :func:`harrell_counts`
+   with the time bucket as the time (applyInPandas)
 3. diff time, diff risk-bucket → bucket-level dominance from a tiny
    (time×risk) count grid (numpy on the driver)
 
@@ -29,16 +29,26 @@ decided by the bucket pair alone — no approximation anywhere; the
 approxQuantile boundaries only affect balance, never counts. Pair
 *sampling* (``sample_frac``) remains as the estimator for quick sweeps.
 
+Every exact count inside a task or on the driver is ONE numpy core,
+:func:`harrell_counts`: dense ranks and ``searchsorted`` over sorted int64
+keys, O(n log n · log n_r) with no Python loop over rows or pairs. The
+grouped kernels (``harrell_cindex_by``, the bucketed classes 1–2,
+``concordance_td_by``, ``models.grouped``) differ only in which slice of
+rows they hand it. The Spark self-joins stay as the reference the tests
+compare it with. Every kernel that returns a DataFrame derives
+``c_index`` from its counts with one Spark expression (:func:`_c_index`),
+so the rounding never depends on the kernel.
+
 The time-dependent form is exact at any size the same way: every
 comparison made by an event subject at cut index g reads the scalar
 ``surv[g]``, so the pairs split into one Harrell count per occupied cut.
 ``concordance_td_exact`` runs all of them as ONE grouped Harrell pass keyed
 by cut (each row exploded into the occupied cuts at or before its own), so
 its Spark job count does not grow with the number of cuts.
-``concordance_td_local`` is the same decomposition in numpy over predictions
-collected to the driver — what ``SurvModel.score`` runs on test splits of at
-most :data:`EXACT_THRESHOLD` rows. Rows with a NULL time or curve drop up
-front in every td kernel.
+``concordance_td_local`` is the same decomposition in numpy, one core call
+per occupied cut — what ``SurvModel.score`` runs on test splits of at most
+:data:`EXACT_THRESHOLD` rows, and what ``concordance_td_by`` runs per
+group. Rows with a NULL time or curve drop up front in every td kernel.
 """
 
 from __future__ import annotations
@@ -49,7 +59,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from elastic_surv_spark.functions.literals import double_array
-from elastic_surv_spark.metrics.brier import prediction_arrays, step_value
+from elastic_surv_spark.metrics.brier import step_value
 
 #: the ungrouped auto switch (``harrell_cindex_counts``, ``concordance_td``):
 #: the pairwise kernel while the frame has at most this many rows, the
@@ -61,11 +71,6 @@ EXACT_THRESHOLD = 20_000
 #: ``harrell_cindex_by``'s auto switch: grouped_map while the largest group
 #: has at most this many rows, bucketed above
 GROUPED_EXACT_THRESHOLD = 200_000
-
-#: elements per boolean block of :func:`concordance_td_local`'s
-#: same-cut comparisons (4 MB per block array)
-_LOCAL_BLOCK = 1 << 22
-
 
 def _pairwise_counts(df: DataFrame) -> DataFrame:
     """Self-join form on (t, e, r) columns — O(n²), small-n tool."""
@@ -88,56 +93,103 @@ def _bucket(col, boundaries: list[float]):
     return F.size(F.filter(arr, lambda b: b <= col.cast("double")))
 
 
-def _local_harrell(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Exact Harrell counts among the rows of ONE time bucket (class 1):
-    sort by time, then the shared Fenwick sweep with the index-event set =
-    the event column — ONE exact kernel (``_masked_harrell_sweep``), so a
-    fix there cannot diverge from this caller (review finding, r11)."""
-    t = pdf["t"].to_numpy(dtype=float)
-    e = pdf["e"].to_numpy(dtype=float)
-    r = pdf["r"].to_numpy(dtype=float)
-    order = np.argsort(t, kind="stable")
-    t, e, r = t[order], e[order], r[order]
-    comparable, concordant, tied = _masked_harrell_sweep(t, e == 1, r)
+def harrell_counts(
+    t: np.ndarray, ev_mask: np.ndarray, r: np.ndarray
+) -> tuple[int, int, int]:
+    """Exact Harrell ``(comparable, concordant, tied)`` counts over the pairs
+    (i, j) with ``ev_mask[i]`` and t_i < t_j: concordant when r_i > r_j,
+    tied when r_i == r_j. Rows may come in any order.
+
+    Both columns become dense ranks (``np.unique``), so values compare as
+    Spark compares doubles: NaN equals NaN and sorts above every number,
+    and −0.0 equals 0.0. Each count is then one ``searchsorted`` of the
+    index subjects into a sorted int64 key ``prefix · n_t + time_rank``,
+    where the partners with a given prefix and a later time form one key
+    range. Ties use the whole risk rank as the prefix. Concordant pairs are
+    counted once per bit b of the risk rank, at the highest bit where the
+    two ranks differ: i has 1 there, j has 0 and both share the bits
+    above, so j's prefix ``rank >> b`` is i's minus one. Work is
+    O(n log n · log n_r); memory is a few int64 arrays of n.
+    """
+    ev = np.flatnonzero(ev_mask)
+    if len(ev) == 0:
+        return 0, 0, 0
+    t_rank = np.unique(np.asarray(t, dtype=float), return_inverse=True)[1].astype(np.int64)
+    r_rank = np.unique(np.asarray(r, dtype=float), return_inverse=True)[1].astype(np.int64)
+    n_t = int(t_rank.max()) + 1
+    t_ev, r_ev = t_rank[ev], r_rank[ev]
+
+    def later(prefix, ev_prefix, ev_t) -> int:
+        # rows j with prefix_j == ev_prefix and a time rank above ev_t
+        keys = np.sort(prefix * n_t + t_rank)
+        lo = np.searchsorted(keys, ev_prefix * n_t + ev_t, side="right")
+        hi = np.searchsorted(keys, (ev_prefix + 1) * n_t, side="left")
+        return int((hi - lo).sum())
+
+    comparable = later(0, 0, t_ev)
+    tied = later(r_rank, r_ev, t_ev)
+    concordant = 0
+    for b in range(int(r_rank.max()).bit_length()):
+        at = ((r_ev >> b) & 1).astype(bool)
+        if at.any():
+            concordant += later(r_rank >> b, (r_ev[at] >> b) - 1, t_ev[at])
+    return comparable, concordant, tied
+
+
+def _counts_frame(comparable: int, concordant: int, tied: int) -> pd.DataFrame:
     return pd.DataFrame(
         {"n_comparable": [comparable], "n_concordant": [concordant], "n_tied": [tied]}
     )
 
 
-def _local_cross_time(pdf: pd.DataFrame, n_time_buckets: int) -> pd.DataFrame:
+def _local_harrell(pdf: pd.DataFrame) -> pd.DataFrame:
+    """:func:`harrell_counts` of one grouped-map slice — a cohort of
+    ``harrell_cindex_by`` or one time bucket of the bucketed kernels
+    (class 1) — as a one-row count frame."""
+    return _counts_frame(
+        *harrell_counts(
+            pdf["t"].to_numpy(dtype=float),
+            pdf["e"].to_numpy(dtype=float) == 1,
+            pdf["r"].to_numpy(dtype=float),
+        )
+    )
+
+
+def _local_cross_time(pdf: pd.DataFrame) -> pd.DataFrame:
     """Class 2: rows share ONE risk bucket; count pairs (event i, row j) with
     j in a STRICTLY LATER time bucket and r_j < r_i (concordant) or
-    r_j == r_i (tied). Sweep risk tie-groups in increasing order keeping a
-    histogram over time buckets; suffix sums answer 'later bucket' queries."""
-    r = pdf["r"].to_numpy(dtype=float)
-    k = pdf["tb"].to_numpy(dtype=np.int64)
-    e = pdf["e"].to_numpy(dtype=float)
-    order = np.argsort(r, kind="stable")
-    r, k, e = r[order], k[order], e[order]
-    m = len(r)
-    hist = np.zeros(n_time_buckets, dtype=np.int64)  # rows with smaller risk
-    concordant = tied = 0
-    lo = 0
-    while lo < m:
-        hi = lo
-        while hi < m and r[hi] == r[lo]:
-            hi += 1
-        grp_k = k[lo:hi]
-        grp_e = e[lo:hi]
-        # suffix counts of strictly-smaller-risk rows by time bucket
-        suffix = np.concatenate([np.cumsum(hist[::-1])[::-1], [0]])
-        ev_k = grp_k[grp_e == 1]
-        if len(ev_k):
-            concordant += int(suffix[ev_k + 1].sum())
-            # ties: equal risk, later time bucket — within this tie-group
-            ghist = np.bincount(grp_k, minlength=n_time_buckets)
-            gsuffix = np.concatenate([np.cumsum(ghist[::-1])[::-1], [0]])
-            tied += int(gsuffix[ev_k + 1].sum())
-        np.add.at(hist, grp_k, 1)
-        lo = hi
-    return pd.DataFrame(
-        {"n_comparable": [0], "n_concordant": [concordant], "n_tied": [tied]}
+    r_j == r_i (tied) — :func:`harrell_counts` with the time bucket as the
+    time. Its comparable pairs belong to the grid (class 3), so 0 here."""
+    _, concordant, tied = harrell_counts(
+        pdf["tb"].to_numpy(dtype=float),
+        pdf["e"].to_numpy(dtype=float) == 1,
+        pdf["r"].to_numpy(dtype=float),
     )
+    return _counts_frame(0, concordant, tied)
+
+
+def _carry(fn):
+    """``fn`` (a slice → one-row count frame kernel) for a grouped map keyed
+    by ``_g``: the group value leads the output row."""
+
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        out = fn(pdf)
+        out.insert(0, "_g", pdf["_g"].iloc[0])
+        return out
+
+    return run
+
+
+def _c_index(round_to: int | None = 6):
+    """``c_index`` from the count columns: NULL without a comparable pair,
+    else (concordant + ½·tied) / comparable, rounded by Spark's ``round``
+    (decimal half-up, as DuckDB rounds). Every kernel that returns a
+    DataFrame uses it, so the rounding never depends on the kernel."""
+    c = F.when(
+        F.col("n_comparable") > 0,
+        (F.col("n_concordant") + 0.5 * F.col("n_tied")) / F.col("n_comparable"),
+    )
+    return c if round_to is None else F.round(c, round_to)
 
 
 def _bucketed_frames(
@@ -184,11 +236,9 @@ def _bucketed_frames(
         F.count("*").alias("n"), F.sum("e").alias("ne")
     )
     schema = "n_comparable long, n_concordant long, n_tied long"
-    part1 = tagged.groupBy("tb").applyInPandas(
-        lambda pdf: _local_harrell(pdf), schema=schema
-    )
+    part1 = tagged.groupBy("tb").applyInPandas(_local_harrell, schema=schema)
     part2 = tagged.groupBy("rb").applyInPandas(
-        lambda pdf: _local_cross_time(pdf, n_tb), schema=schema
+        _local_cross_time, schema=schema
     )
     local = part1.unionByName(part2).agg(
         F.sum("n_comparable").alias("c1"),
@@ -205,7 +255,7 @@ def _grid_dominance(G: np.ndarray, GE: np.ndarray) -> tuple[int, int]:
     later time AND strictly lower risk buckets (a lower risk BUCKET implies
     a strictly lower risk VALUE — the bucket map is monotone — so no tie
     can cross buckets). ONE kernel shared by the single-population and the
-    grouped bucketed paths (the _masked_harrell_sweep discipline)."""
+    grouped bucketed paths (as :func:`harrell_counts` is for the slices)."""
     n_tb = G.shape[0]
     rows_per_tb = G.sum(axis=1)
     events_per_tb = GE.sum(axis=1)
@@ -249,13 +299,10 @@ def harrell_cindex_counts_bucketed(
     comparable = int(local["c1"] or 0) + comparable3
     concordant = int(local["c2"] or 0) + conc3
     tied = int(local["c3"] or 0)
-    c_index = (
-        round((concordant + 0.5 * tied) / comparable, 6) if comparable else None
-    )
     return spark.createDataFrame(
-        [(comparable, concordant, tied, c_index)],
-        schema="n_comparable long, n_concordant long, n_tied long, c_index double",
-    )
+        [(comparable, concordant, tied)],
+        schema="n_comparable long, n_concordant long, n_tied long",
+    ).select("*", _c_index().alias("c_index"))
 
 
 def harrell_cindex_counts(
@@ -297,14 +344,7 @@ def harrell_cindex_counts(
     base = df.select(
         F.col(time_col).alias("t"), F.col(event_col).alias("e"), F.col(risk_col).alias("r")
     )
-    return _pairwise_counts(base).select(
-        "n_comparable",
-        "n_concordant",
-        "n_tied",
-        F.round(
-            (F.col("n_concordant") + 0.5 * F.col("n_tied")) / F.col("n_comparable"), 6
-        ).alias("c_index"),
-    )
+    return _pairwise_counts(base).select("*", _c_index().alias("c_index"))
 
 
 def _largest_cohort_exceeds(
@@ -342,17 +382,18 @@ def harrell_cindex_by(
     leg of the segmented-model metric family (per-cohort KM / td-AUC /
     Brier / now C).
 
-    Each group's counts come from the same O(m log m) Fenwick time-sweep
-    the bucketed single-population path uses for its class-1 buckets
-    (``_local_harrell`` — exact, tie-correct), run as ONE ``applyInPandas``
-    task per group: a single shuffle on the group key, then embarrassingly
-    parallel sweeps. Scale contract: one GROUP fits one task (the
-    segmented-population shape — many bounded segments); a single giant
-    group belongs to the ungrouped size-gated ``harrell_cindex_counts``.
+    Each group's counts come from :func:`harrell_counts`, the numpy core
+    the bucketed single-population path also runs on its class-1 buckets
+    (``_local_harrell`` — exact, tie-correct, O(m log m · log m)), run as
+    ONE ``applyInPandas`` task per group: a single shuffle on the group
+    key, then embarrassingly parallel counts. Scale contract: one GROUP
+    fits one task (the segmented-population shape — many bounded
+    segments); a single giant group belongs to the ungrouped size-gated
+    ``harrell_cindex_counts``.
     ``c_index`` is NULL for groups with no comparable pair. Rows with
     NULL time or risk are excluded up front — the same EVERY-mode
     convention as ``harrell_cindex_counts`` (they would otherwise enter
-    the sweep as NaN and count as latest-time comparables).
+    the counts as NaN, the latest time of all).
 
     ``mode`` (r12, the ungrouped auto-switch mirrored): "grouped_map"
     (default — the registry rows' certified plan shape), "bucketed"
@@ -385,27 +426,16 @@ def harrell_cindex_by(
         F.col(risk_col).cast("double").alias("r"),
     ).where(F.col("t").isNotNull() & F.col("r").isNotNull())
 
-    def sweep(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = _local_harrell(pdf)
-        out.insert(0, "_g", pdf["_g"].iloc[0])
-        return out
-
     counts = base.groupBy("_g").applyInPandas(
-        sweep,
+        _carry(_local_harrell),
         schema=f"_g {gtype}, n_comparable long, n_concordant long, n_tied long",
     )
-    c = F.when(
-        F.col("n_comparable") > 0,
-        (F.col("n_concordant") + 0.5 * F.col("n_tied")) / F.col("n_comparable"),
-    )
-    if round_to is not None:
-        c = F.round(c, round_to)
     return counts.select(
         F.col("_g").alias(group_col),
         "n_comparable",
         "n_concordant",
         "n_tied",
-        c.alias("c_index"),
+        _c_index(round_to).alias("c_index"),
     )
 
 
@@ -425,9 +455,9 @@ def harrell_cindex_by_bucketed(
     counts to ``harrell_cindex_by`` (asserted in tests), but NO grouped-map
     task ever holds a whole cohort:
 
-    - class 1 (same time bucket): one ``_local_harrell`` sweep per
+    - class 1 (same time bucket): one ``_local_harrell`` count per
       (group, tb) slice — ~cohort/n_buckets rows per task;
-    - class 2 (same risk bucket): one ``_local_cross_time`` sweep per
+    - class 2 (same risk bucket): one ``_local_cross_time`` count per
       (group, rb) slice — same bound;
     - class 2+3 cross-bucket: the per-group occupancy GRID (≤ n_buckets²
       rows per group BY CONSTRUCTION, independent of cohort size) through
@@ -472,19 +502,11 @@ def harrell_cindex_by_bucketed(
         f"_g {gtype}, n_comparable long, n_concordant long, n_tied long"
     )
 
-    def _carry(fn):
-        def run(pdf: pd.DataFrame) -> pd.DataFrame:
-            out = fn(pdf)
-            out.insert(0, "_g", pdf["_g"].iloc[0])
-            return out
-
-        return run
-
     part1 = tagged.groupBy("_g", "tb").applyInPandas(
         _carry(_local_harrell), schema=schema
     )
     part2 = tagged.groupBy("_g", "rb").applyInPandas(
-        _carry(lambda pdf: _local_cross_time(pdf, n_tb)), schema=schema
+        _carry(_local_cross_time), schema=schema
     )
     grid = tagged.groupBy("_g", "tb", "rb").agg(
         F.count("*").alias("n"), F.sum("e").alias("ne")
@@ -517,18 +539,12 @@ def harrell_cindex_by_bucketed(
             F.sum("n_tied").alias("n_tied"),
         )
     )
-    c = F.when(
-        F.col("n_comparable") > 0,
-        (F.col("n_concordant") + 0.5 * F.col("n_tied")) / F.col("n_comparable"),
-    )
-    if round_to is not None:
-        c = F.round(c, round_to)
     return counts.select(
         F.col("_g").alias(group_col),
         "n_comparable",
         "n_concordant",
         "n_tied",
-        c.alias("c_index"),
+        _c_index(round_to).alias("c_index"),
     )
 
 
@@ -645,7 +661,7 @@ def concordance_td_by(
     cuts: list[float],
     round_to: int | None = 6,
     mode: str = "grouped_map",
-    exact_threshold: int = 200_000,
+    exact_threshold: int = GROUPED_EXACT_THRESHOLD,
 ) -> DataFrame:
     """Per-group EXACT Antolini time-dependent C-index over a
     survival-curve column: ``(group, n_comparable, n_concordant, n_tied,
@@ -656,14 +672,15 @@ def concordance_td_by(
     S_i(T_i) < S_j(T_i) with S(t) = surv[max {k : cuts[k] <= t}] (1.0
     before the first cut); curve-value ties count 0.5.
 
-    Exact WITHOUT a pairwise join: within each group the pairs partition
-    by the event subject's cut index g — every comparison at index g reads
-    the scalar column surv[:, g] — so one Fenwick time-sweep PER CUT
-    (events restricted to {i : cut(T_i) = g}, risk = −surv[:, g]) covers
-    all pairs exactly once: O(|cuts| · m log m) per group instead of
-    O(m²). Same grouped-map scale contract as ``harrell_cindex_by`` (one
-    GROUP fits one task; group count is the parallelism); ``c_index`` is
-    NULL for groups with no comparable pair.
+    Exact WITHOUT a pairwise join: each group's rows go through
+    :func:`concordance_td_local`, the per-cut decomposition the driver
+    scoring path runs — one :func:`harrell_counts` call per occupied cut
+    (events at cut g, risk = minus the dense rank of surv[:, g]), so no
+    O(m²) block is ever built. Same grouped-map scale contract as
+    ``harrell_cindex_by`` (one GROUP fits one task; group count is the
+    parallelism); ``c_index`` is NULL for groups with no comparable pair.
+    NULL times and curves drop in Spark first, so a NaN that reaches the
+    task is a real value and compares as Spark compares it.
 
     ``mode`` (r12): "grouped_map" (default — the registry rows' certified
     plan shape), "exact_by" (:func:`concordance_td_exact_by`, identical
@@ -687,7 +704,7 @@ def concordance_td_by(
             round_to=round_to,
         )
     gtype = df.schema[group_col].dataType.simpleString()
-    cuts_arr = np.asarray([float(c) for c in cuts], dtype=float)
+    cuts = [float(c) for c in cuts]
     base = df.select(
         F.col(group_col).alias("_g"),
         F.col(time_col).cast("double").alias("t"),
@@ -700,54 +717,26 @@ def concordance_td_by(
         F.col("t").isNotNull() & F.col("s").isNotNull()
     )
 
-    def sweep(pdf: pd.DataFrame) -> pd.DataFrame:
-        gval = pdf["_g"].iloc[0]
-        t = pdf["t"].to_numpy(dtype=float)
-        e = pdf["e"].to_numpy(dtype=float)
-        S = np.asarray(list(pdf["s"]), dtype=float)  # (m, |cuts|)
-        m = len(t)
-        order = np.argsort(t, kind="stable")
-        t, e, S = t[order], e[order], S[order]
-        # cut index of each subject's own time; -1 = before first cut (S=1)
-        gidx = np.searchsorted(cuts_arr, t, side="right") - 1
-        comparable = concordant = tied = 0
-        for g in np.unique(gidx):
-            ev_mask = (gidx == g) & (e == 1)
-            if not ev_mask.any():
-                continue
-            r = np.ones(m) if g < 0 else -S[:, int(g)]
-            c_, co_, ti_ = _masked_harrell_sweep(t, ev_mask, r)
-            comparable += c_
-            concordant += co_
-            tied += ti_
-        cidx = (
-            (concordant + 0.5 * tied) / comparable if comparable else None
-        )
-        if cidx is not None and round_to is not None:
-            cidx = round(cidx, round_to)
-        return pd.DataFrame(
-            {
-                "_g": [gval],
-                "n_comparable": [comparable],
-                "n_concordant": [concordant],
-                "n_tied": [tied],
-                "c_index": [cidx],
-            }
+    def td_counts(pdf: pd.DataFrame) -> pd.DataFrame:
+        return _counts_frame(
+            *concordance_td_local(
+                pdf["t"].to_numpy(dtype=float),
+                pdf["e"].to_numpy(dtype=float),
+                np.asarray(list(pdf["s"]), dtype=float),
+                cuts,
+            )
         )
 
-    out = base.groupBy("_g").applyInPandas(
-        sweep,
-        schema=(
-            f"_g {gtype}, n_comparable long, n_concordant long, "
-            "n_tied long, c_index double"
-        ),
+    counts = base.groupBy("_g").applyInPandas(
+        _carry(td_counts),
+        schema=f"_g {gtype}, n_comparable long, n_concordant long, n_tied long",
     )
-    return out.select(
+    return counts.select(
         F.col("_g").alias(group_col),
         "n_comparable",
         "n_concordant",
         "n_tied",
-        "c_index",
+        _c_index(round_to).alias("c_index"),
     )
 
 
@@ -764,7 +753,7 @@ def concordance_td_exact_by(
     """Per-group EXACT Antolini td-concordance at ANY cohort size — the
     per-cut decomposition of :func:`concordance_td_exact` composed with
     the grouped bucketed kernel (:func:`harrell_cindex_by_bucketed`), so
-    unlike :func:`concordance_td_by` (one grouped-map sweep per cohort)
+    unlike :func:`concordance_td_by` (one grouped-map task per cohort)
     NO task ever holds a whole cohort: each of the ≤ |cuts|+1 occupied
     cut indices contributes one grouped bucketed pass whose tasks are
     (group, bucket) slices and per-group grids. Returns ``(group,
@@ -846,19 +835,12 @@ def concordance_td_exact_by(
             F.sum("n_concordant").alias("n_concordant"),
             F.sum("n_tied").alias("n_tied"),
         )
-        c = F.when(
-            F.col("n_comparable") > 0,
-            (F.col("n_concordant") + 0.5 * F.col("n_tied"))
-            / F.col("n_comparable"),
-        )
-        if round_to is not None:
-            c = F.round(c, round_to)
         out = counts.select(
             F.col("_g").alias(group_col),
             "n_comparable",
             "n_concordant",
             "n_tied",
-            c.alias("c_index"),
+            _c_index(round_to).alias("c_index"),
         )
         # materialize before releasing the persisted base — but keep the
         # return DISTRIBUTED like every sibling metric: an eager
@@ -869,54 +851,6 @@ def concordance_td_exact_by(
         return out.localCheckpoint(eager=True)
     finally:
         base.unpersist()
-
-
-def _masked_harrell_sweep(
-    t: np.ndarray, ev_mask: np.ndarray, r: np.ndarray
-) -> tuple[int, int, int]:
-    """Exact (comparable, concordant, tied) counts for pairs (i, j) with
-    t_i < t_j where i ranges over ``ev_mask`` rows only — the
-    ``_local_harrell`` Fenwick sweep with the index-event set decoupled
-    from the event column (the per-cut restriction ``concordance_td_by``
-    needs). ``t`` must be ascending."""
-    m = len(t)
-    ranks = np.searchsorted(np.unique(r), r)
-    nrank = int(ranks.max()) + 1 if m else 0
-    tree = np.zeros(nrank + 1, dtype=np.int64)
-
-    def bit_add(i):
-        i += 1
-        while i <= nrank:
-            tree[i] += 1
-            i += i & (-i)
-
-    def bit_sum(i):
-        i += 1
-        s = 0
-        while i > 0:
-            s += tree[i]
-            i -= i & (-i)
-        return s
-
-    comparable = concordant = tied = 0
-    idx = m
-    inserted = 0
-    while idx > 0:
-        lo = idx - 1
-        while lo > 0 and t[lo - 1] == t[idx - 1]:
-            lo -= 1
-        for i in range(lo, idx):
-            if ev_mask[i] and inserted > 0:
-                comparable += inserted
-                le = bit_sum(ranks[i])
-                lt = bit_sum(ranks[i] - 1) if ranks[i] > 0 else 0
-                concordant += lt
-                tied += le - lt
-        for i in range(lo, idx):
-            bit_add(ranks[i])
-            inserted += 1
-        idx = lo
-    return comparable, concordant, tied
 
 
 def concordance_td(
@@ -1007,57 +941,37 @@ def concordance_td(
 
 
 def concordance_td_local(
-    pdf: pd.DataFrame,
-    time_col: str,
-    event_col: str,
-    surv_col: str,
-    cuts: list[float],
+    t: np.ndarray, e: np.ndarray, S: np.ndarray, cuts: list[float]
 ) -> tuple[int, int, int]:
-    """:func:`concordance_td` over a prediction frame collected to the
-    driver (``toPandas``): the exact ``(comparable, concordant, tied)``
-    Antolini pair counts, so ``(concordant + 0.5·tied) / comparable`` is
-    the pairwise kernel's value bit for bit. Rows with a NULL time or NULL
-    curve are dropped, as in every kernel.
+    """:func:`concordance_td` over prediction arrays: times ``t``, events
+    ``e`` and curves ``S`` of shape (rows, |cuts|), as
+    :func:`~elastic_surv_spark.metrics.brier.prediction_arrays` gives them.
+    Returns the exact ``(comparable, concordant, tied)`` Antolini pair
+    counts, so ``(concordant + 0.5·tied) / comparable`` is the pairwise
+    kernel's value bit for bit. A NaN time or curve value compares as
+    Spark compares it (NaN above every number).
 
-    The per-cut decomposition of :func:`concordance_td_exact`, in numpy:
-    an event subject i at cut index g (cuts[g] ≤ T_i < cuts[g+1]; −1 before
-    the first cut, where S ≡ 1) compares surv[g] of itself and of each
-    partner. Partners at a later cut index have T_j > T_i by construction,
-    so their counts are two ``searchsorted`` calls into the sorted values
-    of those rows; partners at the same cut index are compared in boolean
-    blocks of at most ``_LOCAL_BLOCK`` elements. Work is O(|cuts| · n log n)
-    plus the same-cut pairs; memory is the n × |cuts| curves plus a few
-    blocks, never an n × n array. Each cut's values become dense integer
-    ranks first, so they compare as Spark compares doubles (NaN equal to
-    itself and above every number, −0.0 equal to 0.0).
+    The per-cut decomposition of :func:`concordance_td_exact`: an event
+    subject i at cut index g (cuts[g] ≤ T_i < cuts[g+1]; −1 before the
+    first cut, where S ≡ 1) compares surv[g] of itself and of each partner,
+    and every partner later in time sits at a cut index ≥ g. So each
+    occupied cut is one :func:`harrell_counts` call over the rows at cut
+    index ≥ g, with the events at g as index subjects and minus the dense
+    rank of ``S[:, g]`` as the risk (0 before the first cut). Ranks are
+    negated, never values: −NaN would still be NaN and sort on top.
     """
-    t, e, S = prediction_arrays(pdf, time_col, event_col, surv_col, len(cuts))
-    n = len(t)
     gidx = np.searchsorted(np.asarray(cuts, dtype=float), t, side="right") - 1
     event = e == 1
     comparable = concordant = tied = 0
     for g in np.unique(gidx[event]):
-        at, later = gidx == g, gidx > g
-        ev = np.flatnonzero(at & event)
-        vals = S[:, g] if g >= 0 else np.ones(n)
-        rank = np.zeros(n, dtype=np.int64)
-        rank[gidx >= g] = np.unique(vals[gidx >= g], return_inverse=True)[1]
-        r_ev = rank[ev]
-        # partners at a later cut: all of them are later in time
-        r_later = np.sort(rank[later])
-        above = np.searchsorted(r_later, r_ev, side="right")
-        below = np.searchsorted(r_later, r_ev, side="left")
-        comparable += len(ev) * len(r_later)
-        concordant += int((len(r_later) - above).sum())
-        tied += int((above - below).sum())
-        # partners at the same cut: those with T_j > T_i, one block at a time
-        same = np.flatnonzero(at)
-        t_same, r_same = t[same], rank[same]
-        step = max(1, _LOCAL_BLOCK // len(same))
-        for lo in range(0, len(ev), step):
-            i = ev[lo : lo + step]
-            pair = t_same[None, :] > t[i][:, None]
-            comparable += int(pair.sum())
-            concordant += int((pair & (r_same[None, :] > rank[i][:, None])).sum())
-            tied += int((pair & (r_same[None, :] == rank[i][:, None])).sum())
+        rows = gidx >= g
+        risk = (
+            -np.unique(S[rows, g], return_inverse=True)[1]
+            if g >= 0
+            else np.zeros(int(rows.sum()))
+        )
+        c_, co_, ti_ = harrell_counts(t[rows], event[rows] & (gidx[rows] == g), risk)
+        comparable += c_
+        concordant += co_
+        tied += ti_
     return comparable, concordant, tied

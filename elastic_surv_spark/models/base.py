@@ -42,8 +42,11 @@ from elastic_surv_spark.metrics import concordance
 from elastic_surv_spark.metrics.brier import (
     integrated_brier_score,
     integrated_brier_score_local,
+    prediction_arrays,
 )
-from elastic_surv_spark.metrics.concordance import concordance_td, concordance_td_local
+# concordance_td is not called here: perfbench's tracing spans patch it in
+# this module's namespace
+from elastic_surv_spark.metrics.concordance import concordance_td, concordance_td_local  # noqa: F401
 from elastic_surv_spark.models.data import SurvDataset
 from elastic_surv_spark.models.nn import MLP, Adam
 from elastic_surv_spark.models.params import Params
@@ -296,12 +299,16 @@ class SurvModel(ABC):
         that many rows × |cuts| doubles, 16 MB at 100 cuts), and
         :func:`~elastic_surv_spark.metrics.concordance.concordance_td_local`
         and :func:`~elastic_surv_spark.metrics.brier.integrated_brier_score_local`
-        score them in numpy: the C-index equals the pairwise Spark kernel's
-        bit for bit, and each BS(τ) is an exactly rounded sum, so neither
-        depends on the partitioning. Above it the prediction frame is cached
-        for the exact Spark C-index and the Spark IBS, and released even
-        when one of them raises. Rows with a NULL time or curve are left out
-        on both paths.
+        score them in numpy: the C-index counts come from one
+        :func:`~elastic_surv_spark.metrics.concordance.harrell_counts` call
+        per occupied cut and equal the pairwise Spark kernel's, and each
+        BS(τ) is an exactly rounded sum, so neither depends on the
+        partitioning. Above it the prediction frame is cached for the exact
+        Spark C-index (the same per-cut counts, in one grouped pass) and the
+        Spark IBS, and released even when one of them raises. Both paths
+        divide the integer counts the same way, unrounded, so the C-index
+        does not depend on the switch. Rows with a NULL time or curve are
+        left out on both paths.
         """
         return score_model(self, dataset, n_grid)
 
@@ -329,16 +336,17 @@ def score_model(model, dataset: SurvDataset, n_grid: int = 100) -> dict[str, flo
         dataset.test_df, id_cols=[t_col, e_col], features=dataset.features
     )
     if dataset.test_rows() <= concordance.EXACT_THRESHOLD:
-        pdf = pred.toPandas()
-        comparable, concordant, tied = concordance_td_local(pdf, t_col, e_col, "surv", cuts)
-        c_index = (concordant + 0.5 * tied) / comparable if comparable else float("nan")
-        brier = integrated_brier_score_local(pdf, t_col, e_col, "surv", cuts, grid, censoring)
-        return {"c_index": float(c_index), "brier_score": float(brier)}
-    pred = pred.cache()
-    try:
-        # the size is known: no probe count before the exact kernel
-        c_index = concordance_td(pred, t_col, e_col, "surv", cuts, mode="exact")
-        brier = integrated_brier_score(pred, t_col, e_col, "surv", cuts, grid, censoring)
-    finally:
-        pred.unpersist()
+        t, e, S = prediction_arrays(pred.toPandas(), t_col, e_col, "surv", len(cuts))
+        comparable, concordant, tied = concordance_td_local(t, e, S, cuts)
+        brier = integrated_brier_score_local(t, e, S, cuts, grid, censoring)
+    else:
+        pred = pred.cache()
+        try:
+            comparable, concordant, tied, _ = concordance.concordance_td_exact(
+                pred, t_col, e_col, "surv", cuts
+            )
+            brier = integrated_brier_score(pred, t_col, e_col, "surv", cuts, grid, censoring)
+        finally:
+            pred.unpersist()
+    c_index = (concordant + 0.5 * tied) / comparable if comparable else float("nan")
     return {"c_index": float(c_index), "brier_score": float(brier)}

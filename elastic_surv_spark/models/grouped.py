@@ -31,6 +31,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from elastic_surv_spark.metrics.concordance import harrell_counts
 from elastic_surv_spark.models.base import SurvModel
 from elastic_surv_spark.models.nn import Adam
 from elastic_surv_spark.models.cox_ph import CoxPHModel
@@ -97,15 +98,19 @@ def _local_breslow(model: CoxPHModel, X: np.ndarray, t: np.ndarray, e: np.ndarra
 
 
 def _np_harrell(t: np.ndarray, e: np.ndarray, risk: np.ndarray) -> float | None:
-    """Exact Harrell C on a small test split (vectorized n² — bounded by
-    the caller's gate); None when no comparable pairs exist."""
-    comp = (t[:, None] < t[None, :]) & (e[:, None] == 1)
-    n_comp = int(comp.sum())
-    if n_comp == 0:
+    """Exact, unrounded Harrell C of a group's test split from
+    :func:`~elastic_surv_spark.metrics.concordance.harrell_counts`; None
+    when no comparable pairs exist.
+
+    The count is O(n log n · log n) and needs no size bound, but
+    :func:`fit_one_local` keeps its ``cindex_max_test`` gate and
+    even-stride subsample: lifting them would change the C-index that
+    ``fit_per_group`` reports, and the rung promotions of the per-segment
+    Hyperband, on every segment above 2,000 test rows."""
+    comparable, concordant, tied = harrell_counts(t, e == 1, risk)
+    if comparable == 0:
         return None
-    conc = int((comp & (risk[:, None] > risk[None, :])).sum())
-    tied = int((comp & (risk[:, None] == risk[None, :])).sum())
-    return float((conc + 0.5 * tied) / n_comp)
+    return float((concordant + 0.5 * tied) / comparable)
 
 
 def fit_one_local(
@@ -167,7 +172,7 @@ def fit_one_local(
     elif len(Xte) > cindex_max_test and cindex_subsample:
         # even-stride subsample over the order-sorted test prefix: strictly
         # increasing distinct indices, no RNG, identical across re-runs —
-        # the n² sweep stays bounded at cindex_max_test² while every config
+        # the count stays bounded at cindex_max_test rows while every config
         # in the rung scores on the SAME rows (comparable by construction)
         sel = (np.arange(cindex_max_test) * len(Xte)) // cindex_max_test
         surv = m._surv_from_output(m.net.forward(Xte[sel], training=False))

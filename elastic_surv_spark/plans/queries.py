@@ -1175,7 +1175,8 @@ def harrell_cindex_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     comparable/concordant/tied counts and C.
 
     Scale: NO task ever holds a whole cohort — per-(cohort, bucket)
-    class-1/2 Fenwick sweeps over ~cohort/n_buckets rows each, plus the
+    class-1/2 counts by the numpy core (harrell_counts) over
+    ~cohort/n_buckets rows each, plus the
     ≤ n_buckets² per-cohort occupancy grid through the shared
     _grid_dominance kernel; never a pairwise join (the oracle's n² join
     is the labeled small-scale twin).
@@ -1422,7 +1423,7 @@ def segmented_cox_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: registry build is one grouped-map over segment-bounded tasks;
     scoring is a broadcast join + one map pass (zero fact-side exchange,
     plan-asserted in tests); both metric legs are the certified grouped
-    kernels (Fenwick sweep per segment; fully in-plan Brier) — no
+    kernels (one harrell_counts call per segment; fully in-plan Brier) — no
     driver-side rows at any segment count.
     """
     from elastic_surv_spark.metrics.brier import ipcw_brier_km_by
@@ -1582,7 +1583,8 @@ def segmented_discrete_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
        risk = −Σ_k (1−Σ_{j≤k} softmax(z)_j) with the max-subtracted
        softmax the SQL mirror replicates exactly (the last-ulp parity
        hinge, proven in tests/test_grouped_models.py DuckDB-parity tests);
-    3. ONE ``harrell_cindex_by`` (the exact grouped Fenwick kernel)
+    3. ONE ``harrell_cindex_by`` (the exact grouped kernel, one
+       harrell_counts call per group)
        scores discrimination per (family, segment) — 8 output rows.
 
     With segmented_cox_pipeline this closes the loop: all THREE model
@@ -1592,7 +1594,7 @@ def segmented_discrete_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: registry is 8 tiny docs broadcast-joined (zero fact-side
     exchange, plan-asserted in tests); scoring is one map pass over the
-    (user × family) frame; the metric leg is one grouped-map sweep per
+    (user × family) frame; the metric leg is one grouped-map count per
     (family, segment). The per-user frame checkpoints once and feeds
     every consumer.
     """
@@ -8151,9 +8153,10 @@ def td_concordance_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     src/elastic_surv/models/base.py:80, grouped).
 
     Scale: exact WITHOUT a pairwise join — within each cohort the pairs
-    partition by the event subject's cut index, so one Fenwick time-sweep
-    per cut (risk = −surv[:, g]) covers every pair once: O(|cuts|·m log m)
-    per group, group-fits-task (the oracle's n² join is the labeled
+    partition by the event subject's cut index, so one harrell_counts call
+    per occupied cut (risk = minus the dense rank of surv[:, g]) covers
+    every pair once: O(|cuts|·m log² m) per group, group-fits-task (the
+    oracle's n² join is the labeled
     small-scale twin). Curves here are deterministic rationals (see the
     oracle note) so the certification is float-exact end to end.
     """

@@ -615,7 +615,7 @@ def test_td_auc_short_span_horizons_collide_without_inflation(spark):
 
 
 def test_harrell_cindex_by_matches_pairwise_mirror(spark):
-    # per-group Fenwick sweep == the O(n^2) pairwise definition per slice,
+    # per-group harrell_counts == the O(n^2) pairwise definition per slice,
     # including ties in time and risk; empty-comparable groups read NULL
     from elastic_surv_spark.metrics.concordance import harrell_cindex_by
 
@@ -871,7 +871,7 @@ def test_d_calibration_km_mass_and_numpy_mirror(spark):
 
 
 def test_concordance_td_by_matches_ungrouped_on_slice(spark, surv_pdf):
-    """Per-group Antolini (concordance_td_by, the per-cut Fenwick sweep) is
+    """Per-group Antolini (concordance_td_by, one core count per cut) is
     EXACTLY the ungrouped pairwise concordance_td applied to each group's
     slice — including curve-value ties and tied times."""
     from elastic_surv_spark.metrics.concordance import (
@@ -1062,7 +1062,10 @@ def test_driver_kernels_agree_with_spark_kernels(spark):
     counts, to the exact decomposition; the IBS within 1e-12 of the Spark
     aggregate and of the numpy reference. The data has time ties, curve
     ties, events before the first cut, and NULL-time and NULL-curve rows."""
-    from elastic_surv_spark.metrics.brier import integrated_brier_score_local
+    from elastic_surv_spark.metrics.brier import (
+        integrated_brier_score_local,
+        prediction_arrays,
+    )
     from elastic_surv_spark.metrics.concordance import (
         concordance_td_exact,
         concordance_td_local,
@@ -1078,9 +1081,9 @@ def test_driver_kernels_agree_with_spark_kernels(spark):
     assert any(a < cuts[0] and b == 1 for a, b, _ in rows)
     rows += [(4.0, 1, None), (7.0, 0, None), (None, 1, [0.5] * len(cuts))]
     df = spark.createDataFrame(rows, "t double, e int, surv array<double>")
-    pdf = df.toPandas()
+    arrays = prediction_arrays(df.toPandas(), "t", "e", "surv", len(cuts))
 
-    comparable, concordant, tied = concordance_td_local(pdf, "t", "e", "surv", cuts)
+    comparable, concordant, tied = concordance_td_local(*arrays, cuts)
     assert tied > 0
     c_local = (concordant + 0.5 * tied) / comparable
     assert c_local == concordance_td(df, "t", "e", "surv", cuts, mode="pairwise")
@@ -1092,7 +1095,7 @@ def test_driver_kernels_agree_with_spark_kernels(spark):
     clean = df.where(F.col("t").isNotNull() & F.col("surv").isNotNull())
     censoring = censoring_km(clean, "t", "e")
     grid = np.linspace(t.min(), t.max(), 25).tolist()
-    ibs_local = integrated_brier_score_local(pdf, "t", "e", "surv", cuts, grid, censoring)
+    ibs_local = integrated_brier_score_local(*arrays, cuts, grid, censoring)
     ibs_spark = integrated_brier_score(df, "t", "e", "surv", cuts, grid, censoring)
     want = np_ipcw_brier(t, e, np.array(cuts), surv, grid)
     want_ibs = np.trapz(want, grid) / (grid[-1] - grid[0])
@@ -1103,7 +1106,10 @@ def test_driver_kernels_agree_with_spark_kernels(spark):
 def test_ibs_drops_null_rows(spark):
     """A row with a NULL time or NULL curve adds no Brier term, so it must
     not count in the 1/N either (it used to lower the score by N/(N+2))."""
-    from elastic_surv_spark.metrics.brier import integrated_brier_score_local
+    from elastic_surv_spark.metrics.brier import (
+        integrated_brier_score_local,
+        prediction_arrays,
+    )
 
     cuts = [2.0, 5.0, 8.0]
     clean = [
@@ -1123,7 +1129,8 @@ def test_ibs_drops_null_rows(spark):
         got.append(integrated_brier_score(df, "t", "e", "surv", cuts, grid, censoring))
         got.append(
             integrated_brier_score_local(
-                df.toPandas(), "t", "e", "surv", cuts, grid, censoring
+                *prediction_arrays(df.toPandas(), "t", "e", "surv", len(cuts)),
+                cuts, grid, censoring,
             )
         )
     assert max(got) - min(got) < 1e-12, got
@@ -1526,3 +1533,114 @@ def test_grouped_exact_kernels_edge_cases(spark):
         for x in harrell_cindex_by_bucketed(small, "g", "t", "e", "r").collect()
     )
     assert g == w
+
+
+def test_c_index_rounds_half_up_in_every_kernel(spark):
+    """One concordant pair in 128: C = 1/128 = 0.0078125 exactly, a decimal
+    half-tie at 6 digits. Every kernel that returns a DataFrame rounds it as
+    Spark's ``round`` (and DuckDB's) does, half-up, to 0.007813. The bucketed
+    kernel and the ``concordance_td_by`` task used to round the binary value
+    half-to-even (0.007812), so ``harrell_cindex_counts(mode="auto")``
+    changed its answer once the input grew past the switch."""
+    from elastic_surv_spark.metrics.concordance import (
+        concordance_td_by,
+        harrell_cindex_by,
+    )
+
+    rows = [(0, 0.0, 1, 1.0, [0.5]), (0, 1.0, 0, 0.0, [0.9])]
+    rows += [(0, 1.0, 0, 2.0, [0.1])] * 127
+    df = spark.createDataFrame(rows, "g int, t double, e int, r double, surv array<double>")
+    want = (128, 1, 0, 0.007813)
+    got = [
+        harrell_cindex_counts(df, "t", "e", "r", mode="pairwise").first(),
+        harrell_cindex_counts(df, "t", "e", "r", mode="bucketed").first(),
+        harrell_cindex_counts(df, "t", "e", "r", exact_threshold=10).first(),
+    ]
+    got += [harrell_cindex_by(df, "g", "t", "e", "r", mode=m).first()[1:]
+            for m in ("grouped_map", "bucketed")]
+    got += [concordance_td_by(df, "g", "t", "e", "surv", [0.0], mode=m).first()[1:]
+            for m in ("grouped_map", "exact_by")]
+    assert [tuple(r) for r in got] == [want] * len(got)
+
+
+def test_exact_counters_agree_with_pairwise_kernels(spark):
+    """The numpy core (``harrell_counts``), ``harrell_cindex_by`` in both
+    kernels, the bucketed ungrouped kernel and ``concordance_td_by`` give
+    the Spark pairwise kernels' answers, group by group, on data with time
+    and risk ties, NULL rows, NaN times, NaN risks, −0.0 and NaN curve
+    values. Group 2 is the NaN-time reproducer: two NaN-time events are no
+    comparable pair (NaN does not precede NaN), which the old tie blocks,
+    comparing times with ``==``, counted as one."""
+    from elastic_surv_spark.metrics.concordance import (
+        concordance_td_by,
+        harrell_cindex_by,
+        harrell_counts,
+    )
+
+    rng = np.random.default_rng(23)
+    n = 160
+    cuts = [3.0, 6.0, 9.0, 12.0]
+    t = rng.integers(0, 15, n).astype(float)  # time ties, events before cuts[0]
+    t[rng.random(n) < 0.05] = np.nan
+    e = rng.binomial(1, 0.6, n)
+    r = rng.integers(0, 8, n).astype(float)  # risk ties
+    r[r == 0] = -0.0
+    r[rng.random(n) < 0.05] = np.nan
+    surv = np.minimum.accumulate(rng.uniform(0.0, 1.0, (n, len(cuts))), axis=1).round(1)
+    surv[rng.random(surv.shape) < 0.05] = np.nan
+    g = rng.integers(0, 2, n)
+    rows = [
+        (int(a), float(b), int(c), float(d), s.tolist())
+        for a, b, c, d, s in zip(g, t, e, r, surv)
+    ]
+    rows += [(0, None, 1, 1.0, [0.5] * 4), (1, 4.0, 1, None, [0.5] * 4),
+             (1, 5.0, 1, 2.0, None)]
+    rows += [(2, 1.0, 0, 0.0, [0.5] * 4), (2, float("nan"), 1, 1.0, [0.5] * 4),
+             (2, float("nan"), 1, 2.0, [0.5] * 4)]
+    df = spark.createDataFrame(
+        rows, "g int, t double, e int, r double, surv array<double>"
+    )
+    by = {
+        m: {x.g: tuple(x)[1:] for x in harrell_cindex_by(df, "g", "t", "e", "r", mode=m).collect()}
+        for m in ("grouped_map", "bucketed")
+    }
+    td_by = {
+        x.g: x.c_index
+        for x in concordance_td_by(df, "g", "t", "e", "surv", cuts, round_to=None).collect()
+    }
+    for gv in (0, 1, 2):
+        part = df.where(F.col("g") == gv)
+        want = tuple(harrell_cindex_counts(part, "t", "e", "r", mode="pairwise").first())
+        comparable = want[0]
+        if gv == 2:
+            assert want == (0, None, None, None)
+            want = (0, 0, 0, None)
+        else:
+            assert comparable > 0 and want[2] > 0  # ties exercised
+        clean = part.where(F.col("t").isNotNull() & F.col("r").isNotNull()).toPandas()
+        assert harrell_counts(
+            clean["t"].to_numpy(), clean["e"].to_numpy() == 1, clean["r"].to_numpy()
+        ) == want[:3], gv
+        assert tuple(harrell_cindex_counts(part, "t", "e", "r", mode="bucketed").first()) == want
+        assert by["grouped_map"][gv] == want, gv
+        assert by["bucketed"][gv] == want, gv
+        td_want = concordance_td(part, "t", "e", "surv", cuts, mode="pairwise")
+        if np.isnan(td_want):
+            assert td_by[gv] is None, gv
+        else:
+            assert td_by[gv] == td_want, gv
+
+
+def test_concordance_td_by_nan_curve_value_matches_pairwise(spark):
+    """A NaN curve value compares as Spark compares it, above every number:
+    the event's S_i(T_i) = NaN is not below its partners', so the pairs are
+    discordant (C = 0.0, as in the pairwise join). Negating the values
+    (risk = −S, with −NaN still NaN on top) made them concordant (1.0)."""
+    from elastic_surv_spark.metrics.concordance import concordance_td_by
+
+    rows = [(0, 1.0, 1, [float("nan")]), (0, 2.0, 0, [0.5]), (0, 3.0, 0, [0.7])]
+    df = spark.createDataFrame(rows, "g int, t double, e int, surv array<double>")
+    want = concordance_td(df, "t", "e", "surv", [0.0], mode="pairwise")
+    got = concordance_td_by(df, "g", "t", "e", "surv", [0.0]).first()
+    assert want == 0.0
+    assert (got.n_comparable, got.n_concordant, got.n_tied, got.c_index) == (2, 0, 0, 0.0)

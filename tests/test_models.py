@@ -161,7 +161,11 @@ def test_score_equals_fresh_metric_calls(dataset):
     # two driver kernels run anew on freshly collected predictions, with a
     # fresh censoring_km, must agree exactly (the Spark kernels are checked
     # against the driver kernels in test_metrics)
-    from elastic_surv_spark.metrics.brier import censoring_km, integrated_brier_score_local
+    from elastic_surv_spark.metrics.brier import (
+        censoring_km,
+        integrated_brier_score_local,
+        prediction_arrays,
+    )
     from elastic_surv_spark.metrics.concordance import concordance_td_local
 
     model = LogisticHazardModel(
@@ -176,18 +180,19 @@ def test_score_equals_fresh_metric_calls(dataset):
     times = dataset.test_df.select(t).toPandas()[t]
     grid = np.linspace(float(times.min()), float(times.max()), 100).tolist()
     censoring = censoring_km(pred, t, e, max_curve_points=512)
-    pdf = pred.toPandas()
-    comparable, concordant, tied = concordance_td_local(pdf, t, e, "surv", cuts)
+    T, E, S = prediction_arrays(pred.toPandas(), t, e, "surv", len(cuts))
+    comparable, concordant, tied = concordance_td_local(T, E, S, cuts)
     assert scores == {
         "c_index": (concordant + 0.5 * tied) / comparable,
-        "brier_score": integrated_brier_score_local(pdf, t, e, "surv", cuts, grid, censoring),
+        "brier_score": integrated_brier_score_local(T, E, S, cuts, grid, censoring),
     }
 
 
 def test_score_paths_agree(dataset, monkeypatch):
     # above the switch (set to 0 here) score runs the Spark kernels: the
-    # exact C-index (rounded to 6 digits) and the Spark IBS (its own
-    # summation order) against the driver path's values
+    # exact C-index counts, divided as the driver path divides them (no
+    # rounding on either side), and the Spark IBS (its own summation
+    # order) against the driver path's values
     import elastic_surv_spark.metrics.concordance as concordance
 
     model = DeepHitModel(in_features=dataset.in_features, epochs=2, patience=2, seed=5)
@@ -195,7 +200,7 @@ def test_score_paths_agree(dataset, monkeypatch):
     driver = model.score(dataset)
     monkeypatch.setattr(concordance, "EXACT_THRESHOLD", 0)
     spark_path = model.score(dataset)
-    assert spark_path["c_index"] == round(driver["c_index"], 6)
+    assert spark_path["c_index"] == driver["c_index"]
     assert abs(spark_path["brier_score"] - driver["brier_score"]) < 1e-12
 
 

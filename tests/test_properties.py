@@ -8,6 +8,8 @@ asof boundary direction, bucket boundary loss).
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -259,7 +261,7 @@ def test_concordance_td_by_matches_bruteforce_property(
     spark, seed, n, n_cuts, n_groups
 ):
     """Property fuzz for the newest exact kernel (r11): per-group Antolini
-    via per-cut Fenwick sweeps == the O(n²) definitional mirror, over
+    via one harrell_counts call per cut == the O(n²) definitional mirror, over
     random censoring, TIED times (integer draws), tied curve values
     (coarse rounding), and multiple groups."""
     from elastic_surv_spark.metrics.concordance import concordance_td_by
@@ -304,6 +306,69 @@ def test_concordance_td_by_matches_bruteforce_property(
         ).collect()
     }
     assert got == want
+
+
+def _spark_order(x: float) -> tuple[int, float]:
+    # Spark's double order: NaN equal to itself and above every number;
+    # -0.0 == 0.0 holds for Python floats already
+    return (1, 0.0) if math.isnan(x) else (0, x)
+
+
+def _bruteforce_harrell(t, ev, r) -> tuple[int, int, int]:
+    comp = conc = tied = 0
+    for i in range(len(t)):
+        if not ev[i]:
+            continue
+        for j in range(len(t)):
+            if _spark_order(t[i]) < _spark_order(t[j]):
+                comp += 1
+                conc += _spark_order(r[i]) > _spark_order(r[j])
+                tied += _spark_order(r[i]) == _spark_order(r[j])
+    return comp, conc, tied
+
+
+@pytest.mark.parametrize(
+    "t, ev, r",
+    [
+        ([], [], []),  # empty input
+        ([1.0], [True], [0.5]),  # a single row
+        ([1.0, 2.0, 3.0], [False] * 3, [3.0, 2.0, 1.0]),  # no events
+        ([float("nan")] * 2, [True] * 2, [1.0, 2.0]),  # NaN never precedes NaN
+        ([1.0, float("nan")], [True, False], [0.0, 1.0]),  # NaN time is latest
+        ([1.0, 2.0, 3.0], [True] * 3, [float("nan"), 1.0, float("nan")]),
+        ([-0.0, 0.0, 1.0], [True] * 3, [0.0, -0.0, 0.0]),  # -0.0 == 0.0
+    ],
+)
+def test_harrell_counts_edge_cases_equal_bruteforce(t, ev, r):
+    from elastic_surv_spark.metrics.concordance import harrell_counts
+
+    t, r = np.asarray(t, dtype=float), np.asarray(r, dtype=float)
+    assert harrell_counts(t, np.asarray(ev, dtype=bool), r) == _bruteforce_harrell(t, ev, r)
+
+
+@given(st.integers(0, 10_000))
+@settings(max_examples=200, deadline=None)
+def test_harrell_counts_equals_bruteforce(seed):
+    """The one exact Harrell core behind every grouped and driver-side
+    C-index kernel: on rows in any order, with time ties, risk ties, NaN
+    times, NaN risks and −0.0, its (comparable, concordant, tied) equal the
+    O(n²) count under Spark's comparison of doubles."""
+    from elastic_surv_spark.metrics.concordance import harrell_counts
+
+    rng = np.random.default_rng(seed)
+    n = int(rng.integers(0, 30))
+    values = np.array([-0.0, 0.0, 1.0, 2.5, 3.0, np.nan])
+
+    def column():
+        if rng.random() < 0.5:
+            return rng.choice(values, n)  # heavy ties
+        x = rng.normal(size=n)
+        x[rng.random(n) < 0.1] = np.nan
+        return x
+
+    t, r = column(), column()
+    ev = rng.random(n) < rng.random()
+    assert harrell_counts(t, ev, r) == _bruteforce_harrell(t, ev, r)
 
 
 @given(st.integers(0, 10_000))
