@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from elastic_surv_spark.functions.literals import double_array
+from elastic_surv_spark.metrics.brier import prediction_arrays
 from elastic_surv_spark.models.base import score_model
 from elastic_surv_spark.models.data import SurvDataset
 
@@ -90,6 +91,14 @@ class AFTBaselineModel:
             lambda c: F.exp(-F.exp((F.log(c) - mu) / F.lit(sigma))),
         )
         return df.select(*id_cols, surv.alias("surv"))
+
+    def _test_predictions(self, dataset: SurvDataset) -> tuple[np.ndarray, ...]:
+        """``(t, e, S)`` of the test split for :func:`score_model`'s driver
+        path: one JVM predict-and-collect. The closed form stays in Spark
+        because its ``exp``/``log`` are not bit-reproducible in numpy."""
+        t_col, e_col = dataset.time_column, dataset.event_column
+        pred = self.predict(dataset.test_df, id_cols=[t_col, e_col], features=dataset.features)
+        return prediction_arrays(pred.toPandas(), t_col, e_col, "surv", len(self.cuts))
 
     def score(self, dataset: SurvDataset, n_grid: int = 100) -> dict[str, float]:
         return score_model(self, dataset, n_grid)

@@ -1,21 +1,21 @@
-"""Model ABC + training loops + distributed scoring.
+"""Model ABC + training loops + scoring.
 
 ≡ reference ``ModelSkeleton`` (src/elastic_surv/models/base.py:11-82):
 ``hyperparameter_space`` / ``sample_hyperparameters`` / ``name`` / ``train``
 / ``predict`` / ``score``. ``score`` reproduces base.py:61-82: predictions on
 the test split → Antolini time-dependent concordance + integrated Brier
 score over a 100-point linspace(t_min, t_max) grid, censoring via KM
-(:func:`score_model`, shared with the AFT baseline). Like the reference,
-which scores driver arrays with pycox's ``EvalSurv``, a test split of at
-most ``concordance.EXACT_THRESHOLD`` rows (20,000) is scored on the
-driver: one Spark job runs the inference and collects the predictions
-(at most that many rows × |cuts| doubles, 16 MB at 100 cuts), and numpy
-kernels compute both metrics. Larger splits are scored in Spark.
+(:func:`score_model`, shared with the AFT baseline).
 
 Training paths:
 - ``local``   — exact reference semantics: sequential mini-batches, Adam,
   early stopping on validation loss with patience (≡ tt.cb.EarlyStopping,
-  model_cox_ph.py:62,96-98); data arrives via one Arrow transfer.
+  model_cox_ph.py:62,96-98). Like the reference, which trains and scores
+  on driver tensors, it runs on the ``(X, t, e)`` arrays the dataset
+  collects once per split (one Arrow transfer each) and shares,
+  read-only, with every fit; the label cuts and CoxPH's Breslow curve
+  come from the same arrays, so a local fit starts no Spark job after
+  those collects.
 - ``averaged`` — scale path: per-partition local SGD from broadcast weights,
   size-weighted parameter averaging per round (local-SGD / FedAvg family).
   Each executor sees only its partition; nothing but weight vectors crosses
@@ -23,9 +23,12 @@ Training paths:
   pair-rank and Cox risk-sets are batch-local), so semantics match the
   reference's batched losses.
 
-Inference is always distributed: broadcast weights, ``mapInPandas`` forward
-pass, survival curves as array columns. The local path's ``(X, t, e)``
-arrays are collected once per dataset and shared, read-only, by every fit.
+Scoring follows the test split's size, whatever the training mode: up to
+``concordance.EXACT_THRESHOLD`` rows (20,000) the net's forward pass runs
+on the dataset's test arrays and numpy kernels compute both metrics, with
+no Spark job per score; larger splits are scored in Spark, through
+:meth:`SurvModel.predict` (broadcast weights, ``mapInPandas`` forward pass,
+survival curves as array columns).
 """
 
 from __future__ import annotations
@@ -42,7 +45,6 @@ from elastic_surv_spark.metrics import concordance
 from elastic_surv_spark.metrics.brier import (
     integrated_brier_score,
     integrated_brier_score_local,
-    prediction_arrays,
 )
 # concordance_td is not called here: perfbench's tracing spans patch it in
 # this module's namespace
@@ -294,16 +296,16 @@ class SurvModel(ABC):
         come from the dataset, which computes them once however many models
         (or concurrent Hyperband trials) score on it.
 
-        Up to ``concordance.EXACT_THRESHOLD`` test rows, one Spark job runs
-        the inference and collects the ``(T, E, surv)`` rows (Arrow; at most
-        that many rows × |cuts| doubles, 16 MB at 100 cuts), and
+        Up to ``concordance.EXACT_THRESHOLD`` test rows, the curves come
+        from :meth:`_test_predictions` (the forward pass on the dataset's
+        raw test arrays, no Spark job), and
         :func:`~elastic_surv_spark.metrics.concordance.concordance_td_local`
         and :func:`~elastic_surv_spark.metrics.brier.integrated_brier_score_local`
         score them in numpy: the C-index counts come from one
         :func:`~elastic_surv_spark.metrics.concordance.harrell_counts` call
         per occupied cut and equal the pairwise Spark kernel's, and each
-        BS(τ) is an exactly rounded sum, so neither depends on the
-        partitioning. Above it the prediction frame is cached for the exact
+        BS(τ) is an exactly rounded sum, so neither depends on the row
+        order. Above it the :meth:`predict` frame is cached for the exact
         Spark C-index (the same per-cut counts, in one grouped pass) and the
         Spark IBS, and released even when one of them raises. Both paths
         divide the integer counts the same way, unrounded, so the C-index
@@ -311,6 +313,17 @@ class SurvModel(ABC):
         left out on both paths.
         """
         return score_model(self, dataset, n_grid)
+
+    def _test_predictions(self, dataset: SurvDataset) -> tuple[np.ndarray, ...]:
+        """``(t, e, S)`` of the test split as
+        :func:`~elastic_surv_spark.metrics.brier.prediction_arrays` gives
+        them for a collected prediction frame: the raw times and events,
+        and the curves from the forward pass on the dataset's test arrays,
+        without the rows whose time is NaN (NULL in the split)."""
+        X, t, e = dataset.raw_numpy("test")
+        keep = ~np.isnan(t)
+        S = self._surv_from_output(self.net.forward(X[keep], training=False))
+        return t[keep], e[keep], S
 
     # ---- misc ------------------------------------------------------------
     def hyperparams_hash(self, params: dict[str, Any]) -> str:
@@ -327,20 +340,19 @@ class SurvModel(ABC):
 
 
 def score_model(model, dataset: SurvDataset, n_grid: int = 100) -> dict[str, float]:
-    """:meth:`SurvModel.score` for any model with ``cuts`` and ``predict``
-    (the AFT baseline scores through it too)."""
+    """:meth:`SurvModel.score` for any model with ``cuts``, ``predict`` and
+    ``_test_predictions`` (the AFT baseline scores through it too)."""
     t_col, e_col = dataset.time_column, dataset.event_column
     censoring, grid = dataset.scoring_reference(n_grid)
     cuts = [float(c) for c in model.cuts]
-    pred = model.predict(
-        dataset.test_df, id_cols=[t_col, e_col], features=dataset.features
-    )
     if dataset.test_rows() <= concordance.EXACT_THRESHOLD:
-        t, e, S = prediction_arrays(pred.toPandas(), t_col, e_col, "surv", len(cuts))
+        t, e, S = model._test_predictions(dataset)
         comparable, concordant, tied = concordance_td_local(t, e, S, cuts)
         brier = integrated_brier_score_local(t, e, S, cuts, grid, censoring)
     else:
-        pred = pred.cache()
+        pred = model.predict(
+            dataset.test_df, id_cols=[t_col, e_col], features=dataset.features
+        ).cache()
         try:
             comparable, concordant, tied, _ = concordance.concordance_td_exact(
                 pred, t_col, e_col, "surv", cuts

@@ -10,15 +10,20 @@ the same batch-local semantics as pycox's CoxPH loss:
 
     L = -(1/D) Σ_{i: e_i=1} [ g_i - log Σ_{j: t_j >= t_i} exp(g_j) ]
 
-Baseline hazards come from one distributed aggregate: a mapInPandas forward
-pass for exp(g) feeds a ``groupBy(duration)`` of event counts d_t and exp(g)
-sums, one row per distinct time (quantized to ≤ ``max_curve_points`` at
-scale). The driver collects those bounded rows and runs the two cumulative
-sums over them: the reverse one for the risk-set sums, h0(t) = d_t /
+Breslow baseline hazards: one row per distinct training time (quantized to
+≤ ``max_curve_points`` when there are more) with the event count d_t and
+the exp(g) sum, then two cumulative sums over those bounded rows on the
+driver: the reverse one for the risk-set sums, h0(t) = d_t /
 Σ_{T_j >= t} exp(g_j), and the forward one for H0(t) = Σ_{s <= t} h0(s).
+The local mode builds the rows in numpy from the train split's collected
+arrays (no Spark job; the grouped per-segment trainer uses the same code);
+the averaged mode, whose data stays on the executors, builds them with one
+distributed aggregate.
 """
 
 from __future__ import annotations
+
+import math
 
 import numpy as np
 from pyspark.sql import functions as F
@@ -91,22 +96,25 @@ class CoxPHModel(SurvModel):
         return float(loss), dg[:, None]
 
     def _post_fit(self, dataset: SurvDataset) -> None:
-        """Breslow baseline hazards from one distributed aggregate
-        (≡ reference compute_baseline_hazards, model_cox_ph.py:100-103).
+        """Breslow baseline hazards (≡ reference compute_baseline_hazards,
+        model_cox_ph.py:100-103) on the train split's raw times and events.
 
-        Scale posture: the distinct-time domain is coarsened to
-        ≤ ``max_curve_points`` bins DISTRIBUTEDLY (``quantize_times``, the
-        same life-table discretization metrics/km.py uses — a no-op below
-        the cap, so discrete-time curves stay bit-identical to the exact
-        form) BEFORE the ``groupBy(t)`` aggregate and its collect. The
-        quantization statistics come from ``dataset.train_time_stats()``
-        (computed once per dataset on the raw train split — running them
-        on the scored frame would repeat the mapInPandas forward pass,
-        since column pruning cannot reach through Python). The two
-        cumulative sums then run on the driver over the ≤ max_curve_points
-        + 1 collected rows. With continuous float times at any n, the
-        collect and the driver work are O(max_curve_points).
+        The local mode runs :meth:`fit_baseline` on the split's collected
+        arrays. The averaged mode builds the same per-time rows with one
+        distributed aggregate: a mapInPandas forward pass for exp(g) feeds
+        a ``groupBy(t)`` of the event counts and exp(g) sums, after
+        ``quantize_times`` coarsened the times DISTRIBUTEDLY to ≤
+        ``max_curve_points`` bins (the life-table discretization
+        metrics/km.py uses, a no-op below the cap). Its quantization
+        statistics come from ``dataset.train_time_stats()`` (computed once
+        per dataset on the raw train split — running them on the scored
+        frame would repeat the forward pass, since column pruning cannot
+        reach through Python). Either way, the collect and the driver work
+        are O(max_curve_points) with continuous float times at any n.
         """
+        if self.mode != "averaged":
+            self.fit_baseline(*dataset.raw_numpy("train"))
+            return
         scored = self.predict_risk(dataset.train_df, dataset)
         t_col, e_col = dataset.time_column, dataset.event_column
         scored = quantize_times(
@@ -115,7 +123,7 @@ class CoxPHModel(SurvModel):
             self.max_curve_points,
             stats=dataset.train_time_stats(),
         )
-        curve = (
+        rows = (
             scored.groupBy(F.col(t_col).alias("t"))
             .agg(
                 F.sum(F.col(e_col).cast("double")).alias("d"),
@@ -123,7 +131,31 @@ class CoxPHModel(SurvModel):
             )
             .collect()
         )
-        # bounded by construction: quantize_times caps the domain at
+        self._set_baseline(sorted((r["t"], r["d"], r["sum_eg"]) for r in rows))
+
+    def fit_baseline(self, X: np.ndarray, t: np.ndarray, e: np.ndarray) -> None:
+        """Breslow baseline hazards from driver arrays: the trained net's
+        forward pass, the times quantized as ``quantize_times`` quantizes
+        them (:func:`_np_quantize`), then per distinct time the event count
+        and the exp(g) sum, each exactly rounded (``math.fsum``), so the
+        curve does not depend on the arrays' row order. The cuts equal the
+        Spark aggregate's; H0 differs from it only by that aggregate's
+        partition-order sums (and BLAS's batch shapes in exp(g))."""
+        eg = np.exp(self.net.forward(X, training=False)[:, 0])
+        e = np.asarray(e, dtype=float)
+        tq = _np_quantize(np.asarray(t, dtype=float), self.max_curve_points)
+        # ≤ max_curve_points + 1 distinct times, so one mask per time is cheap
+        self._set_baseline(
+            [
+                (u, math.fsum(e[tq == u]), math.fsum(eg[tq == u]))
+                for u in np.unique(tq).tolist()
+            ]
+        )
+
+    def _set_baseline(self, curve: list[tuple[float, float | None, float | None]]) -> None:
+        """``cuts`` and ``baseline_cumhaz`` from the ``(t, d, Σexp(g))``
+        rows in ascending t, with the two running sums on the driver."""
+        # bounded by construction: quantization caps the domain at
         # max_curve_points bins (+1 for the lower edge). A hard raise, not
         # an assert — the driver-side collect bound is load-bearing and
         # must hold under `python -O` too.
@@ -132,14 +164,13 @@ class CoxPHModel(SurvModel):
                 f"baseline-hazard curve has {len(curve)} points, above the "
                 f"max_curve_points={self.max_curve_points} collect bound"
             )
-        curve.sort(key=lambda r: r["t"])
         # risk-set sums: Σ_{T_j >= t} exp(g_j), accumulated from the latest t
-        denom = _running_sum([r["sum_eg"] for r in reversed(curve)])[::-1]
+        denom = _running_sum([s for _, _, s in reversed(curve)])[::-1]
         h0 = [
-            None if r["d"] is None or q is None else r["d"] / q
-            for r, q in zip(curve, denom)
+            None if d is None or q is None else d / q
+            for (_, d, _), q in zip(curve, denom)
         ]
-        self.cuts = np.array([float(r["t"]) for r in curve])
+        self.cuts = np.array([float(t) for t, _, _ in curve])
         self.baseline_cumhaz = np.array([float(h) for h in _running_sum(h0)])
 
     def predict_risk(self, df, dataset: SurvDataset):
@@ -179,6 +210,17 @@ class CoxPHModel(SurvModel):
         # S(t|x) = exp(-H0(t) * exp(g))  (≡ model_cox_ph.py:106-110)
         eg = np.exp(z[:, 0])
         return np.exp(-np.outer(eg, self.baseline_cumhaz))
+
+
+def _np_quantize(t: np.ndarray, cap: int) -> np.ndarray:
+    """numpy form of ``metrics.km.quantize_times`` (the same min/max + ceil
+    arithmetic, so the same doubles): a no-op at ≤ ``cap`` distinct times."""
+    if len(np.unique(t)) <= cap:
+        return t
+    lo, hi = float(t.min()), float(t.max())
+    width = (hi - lo) / cap
+    k = np.minimum(float(cap), np.ceil((t - lo) / width))
+    return np.minimum(hi, lo + k * width)
 
 
 def _running_sum(values: list[float | None]) -> list[float | None]:

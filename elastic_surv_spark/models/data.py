@@ -6,12 +6,20 @@ src/elastic_surv/dataset.py:16-225). Here the featurization is fit ONCE on
 the full frame (fixing the reference's refit-per-copy waste), the transform
 is a lazy column expression fused into every downstream plan by Catalyst,
 and the split DataFrames are cached — the reference re-pulled every batch
-from ES every epoch (SURVEY §4 'Caching / reuse'). What scoring needs from
-the test split alone (the censoring curve, the time grid, the row count),
-what the CoxPH baseline-hazard fit needs from the train split alone (the
-time column's distinct count and range), and the local training path's
-``(X, t, e)`` arrays of each split are computed once per dataset, not once
-per model.
+from ES every epoch (SURVEY §4 'Caching / reuse').
+
+Everything a model needs from a split alone is computed once per dataset,
+not once per model:
+
+- each split's raw ``(X, t, e)`` arrays, collected in one Arrow transfer
+  on first use and shared read-only. The local mode runs on them after
+  that collect: training (through the frame's label transformer), the
+  discrete models' label cuts, CoxPH's Breslow curve, and scoring below
+  ``concordance.EXACT_THRESHOLD`` test rows;
+- from the test split, the censoring curve, the time grid and the row
+  count, which every score needs;
+- from the train split, the time column's distinct count and range, by
+  which the averaged-mode CoxPH quantizes its Spark Breslow aggregate.
 """
 
 from __future__ import annotations
@@ -54,15 +62,17 @@ class SurvDataset:
             tuple[tuple[list[float], list[float]], float, float, int] | None
         ) = None
         self._train_time_stats: tuple[int, float | None, float | None] | None = None
-        # split name -> (label transformer the arrays were made with, arrays)
-        self._numpy: dict[str, tuple[object, tuple[np.ndarray, ...]]] = {}
+        # split name -> raw (X, t, e); split name -> (label transformer,
+        # the arrays with it applied)
+        self._raw: dict[str, tuple[np.ndarray, ...]] = {}
+        self._labelled: dict[str, tuple[object, tuple[np.ndarray, ...]]] = {}
 
     @property
     def in_features(self) -> int:
         return len(self.features)
 
     def to_numpy(self, df: DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-        """(X, t, e) arrays — the local training path (Arrow transfer).
+        """Raw (X, t, e) float arrays of ``df`` (Arrow transfer).
 
         Valid when the split fits driver memory (harness scale / reference
         parity); the distributed path never calls this.
@@ -71,9 +81,6 @@ class SurvDataset:
         X = pdf[self.features].to_numpy(dtype=float)
         t = pdf[self.time_column].to_numpy(dtype=float)
         e = pdf[self.event_column].to_numpy(dtype=float)
-        if self.frame.label_transformer is not None:
-            # ≡ reference dataset.py:213-214 — outcome hook at batch time
-            t, e = self.frame.label_transformer(t, e)
         return X, t, e
 
     def _test_stats(self) -> tuple[tuple[list[float], list[float]], float, float, int]:
@@ -116,7 +123,8 @@ class SurvDataset:
 
     def train_time_stats(self) -> tuple[int, float | None, float | None]:
         """``(distinct count, min, max)`` of the train split's time column
-        as double — the statistics ``km.quantize_times`` coarsens by.
+        as double — the statistics ``km.quantize_times`` coarsens the
+        averaged-mode CoxPH's Spark Breslow aggregate by.
 
         Computed in one aggregate on first use (under the scoring lock, so
         concurrent fits wait for one computation) and reused by every later
@@ -133,24 +141,48 @@ class SurvDataset:
                 self._train_time_stats = (int(row["nd"]), row["lo"], row["hi"])
         return self._train_time_stats
 
-    def _split_numpy(self, split: str) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-        """:meth:`to_numpy` of one split, collected on first use (under the
-        scoring lock: Hyperband fits run concurrently) and again only if the
-        frame's label transformer changes. Every fit shares the arrays, so
-        they are read-only: a model writing into them fails loudly."""
+    def _split_numpy(
+        self, split: str, labelled: bool
+    ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+        """One split's (X, t, e), raw or with the frame's label transformer
+        applied. The raw arrays are collected once, on first use (under the
+        scoring lock: Hyperband fits run concurrently); the labelled ones
+        are computed from them once per transformer. Every model shares the
+        arrays, so they are read-only: a model writing into them fails
+        loudly."""
         with self._scoring_lock:
-            hook = self.frame.label_transformer
-            cached = self._numpy.get(split)
-            if cached is None or cached[0] is not hook:
+            raw = self._raw.get(split)
+            if raw is None:
                 df = self.train_df if split == "train" else self.test_df
-                arrays = self.to_numpy(df)
-                for a in arrays:
-                    a.setflags(write=False)
-                cached = self._numpy[split] = (hook, arrays)
+                raw = self._raw[split] = _read_only(self.to_numpy(df))
+            hook = self.frame.label_transformer
+            if not labelled or hook is None:
+                return raw
+            cached = self._labelled.get(split)
+            if cached is None or cached[0] is not hook:
+                X, t, e = raw
+                # ≡ reference dataset.py:213-214 — outcome hook at batch time
+                cached = self._labelled[split] = (hook, (X, *_read_only(hook(t, e))))
         return cached[1]
 
+    def raw_numpy(self, split: str) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+        """``split``'s ("train" or "test") raw (X, t, e): the time and
+        event columns as stored, which the label cuts, the Breslow curve
+        and scoring read, as the Spark path reads the columns."""
+        return self._split_numpy(split, labelled=False)
+
     def train_numpy(self):
-        return self._split_numpy("train")
+        """The train split's (X, t, e) as the local trainer sees them (after
+        the frame's label transformer)."""
+        return self._split_numpy("train", labelled=True)
 
     def test_numpy(self):
-        return self._split_numpy("test")
+        """The test split's (X, t, e) after the frame's label transformer
+        (the local trainer's validation data)."""
+        return self._split_numpy("test", labelled=True)
+
+
+def _read_only(arrays):
+    for a in arrays:
+        a.setflags(write=False)
+    return arrays

@@ -20,7 +20,7 @@ import numpy as np
 
 from elastic_surv_spark.models.base import SurvModel
 from elastic_surv_spark.models.data import SurvDataset
-from elastic_surv_spark.models.labels import LabelTransform
+from elastic_surv_spark.models.labels import LabelTransform, train_label_transform
 from elastic_surv_spark.models.params import Categorical, Float, Integer, Params
 
 
@@ -67,9 +67,7 @@ class DeepHitModel(SurvModel):
 
     def _out_features(self, dataset: SurvDataset) -> int:
         if self.labtrans is None:
-            self.labtrans = LabelTransform.fit(
-                dataset.train_df, dataset.time_column, self.num_durations
-            )
+            self.labtrans = train_label_transform(dataset, self.num_durations, self.mode)
             self.cuts = self.labtrans.cuts
         return self.labtrans.out_features
 

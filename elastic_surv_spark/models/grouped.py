@@ -16,10 +16,11 @@ COUNT is the parallelism. Groups below ``min_rows`` emit a NULL
 model_json row instead of a degenerate fit.
 
 The discrete-time label transform fits on each group's TRAIN prefix
-(equidistant cuts ≡ models/labels.py `fit`, reference dataset.py:122-132)
-and CoxPH's Breslow baseline hazards are the numpy twin of the
-distributed `_post_fit` (same life-table quantization, same risk-set
-sums) — every piece is the group-local form of an operator certified
+(``LabelTransform.equidistant``, the cuts ``LabelTransform.fit`` gives,
+reference dataset.py:122-132) and CoxPH's Breslow baseline hazards come
+from ``CoxPHModel.fit_baseline``, the local mode's own numpy Breslow (same
+life-table quantization, same risk-set sums as the averaged mode's Spark
+aggregate) — every piece is the group-local form of an operator certified
 elsewhere.
 """
 
@@ -34,7 +35,7 @@ from pyspark.sql import DataFrame
 from elastic_surv_spark.metrics.concordance import harrell_counts
 from elastic_surv_spark.models.base import SurvModel
 from elastic_surv_spark.models.nn import Adam
-from elastic_surv_spark.models.cox_ph import CoxPHModel
+from elastic_surv_spark.models.cox_ph import CoxPHModel, _np_quantize
 from elastic_surv_spark.models.deephit import DeepHitModel
 from elastic_surv_spark.models.labels import LabelTransform
 from elastic_surv_spark.models.logistic_hazard import LogisticHazardModel
@@ -72,29 +73,6 @@ class _LocalSplit:
 
     def test_numpy(self):
         return self._test
-
-
-def _np_quantize(t: np.ndarray, cap: int) -> np.ndarray:
-    """numpy twin of metrics.km.quantize_times (same min/max + ceil form)."""
-    if len(np.unique(t)) <= cap:
-        return t
-    lo, hi = float(t.min()), float(t.max())
-    width = (hi - lo) / cap
-    k = np.minimum(float(cap), np.ceil((t - lo) / width))
-    return np.minimum(hi, lo + k * width)
-
-
-def _local_breslow(model: CoxPHModel, X: np.ndarray, t: np.ndarray, e: np.ndarray) -> None:
-    """Group-local Breslow baseline hazards ≡ CoxPHModel._post_fit math."""
-    z = model.net.forward(X, training=False).ravel()
-    eg = np.exp(z)
-    tq = _np_quantize(t.astype(float), model.max_curve_points)
-    ts = np.unique(tq)
-    d = np.array([e[tq == u].sum() for u in ts], dtype=float)
-    sum_eg = np.array([eg[tq == u].sum() for u in ts], dtype=float)
-    denom = np.cumsum(sum_eg[::-1])[::-1]  # risk set: every subject with t >= u
-    model.cuts = ts
-    model.baseline_cumhaz = np.cumsum(d / denom)
 
 
 def _np_harrell(t: np.ndarray, e: np.ndarray, risk: np.ndarray) -> float | None:
@@ -145,9 +123,7 @@ def fit_one_local(
     m = _FAMILIES[family](in_features=data.in_features, **hparams)
     if isinstance(m, (LogisticHazardModel, DeepHitModel)):
         # equidistant cuts on the TRAIN prefix ≡ LabelTransform.fit
-        m.labtrans = LabelTransform(
-            np.linspace(0.0, float(ttr.max()), m.num_durations)
-        )
+        m.labtrans = LabelTransform.equidistant(ttr.max(), m.num_durations)
         m.cuts = m.labtrans.cuts
     out = m._out_features(data)  # labtrans already set: no Spark touched
     m.net = MLP(
@@ -161,7 +137,7 @@ def fit_one_local(
     )
     m._fit_local(data)
     if isinstance(m, CoxPHModel):
-        _local_breslow(m, Xtr, ttr, etr)
+        m.fit_baseline(Xtr, ttr, etr)
 
     val_targets = m._prepare_targets(tte, ete)
     val_loss = m._epoch(Adam(m.net, lr=0.0), Xte, val_targets, training=False)
@@ -324,8 +300,9 @@ def pseudo_cox_registry(
       (operators/quality_model.py:pseudo_weights), so no weight literal
       ships anywhere;
     - a Breslow baseline computed from the SEGMENT'S OWN data under that
-      β (the numpy twin of CoxPHModel._post_fit: life-table quantization
-      to ``max_curve_points``, risk-set reverse cumsum) — pure SQL, which
+      β (the arithmetic of CoxPHModel.fit_baseline: life-table
+      quantization to ``max_curve_points``, risk-set reverse cumsum) —
+      reproducible in plain SQL, which
       is what makes the downstream ``score_per_group`` risk and the
       per-cohort metric quartet oracle-certifiable end to end;
     - H0 rounded to ``h0_round`` digits: the float-parity hinge. The two
@@ -362,13 +339,14 @@ def pseudo_cox_registry(
 
         # deterministic float-sum order within the engine (grouped-map row
         # arrival order is not stable across runs).
-        # The Breslow body below intentionally mirrors _local_breslow
-        # INLINE rather than calling it: _local_breslow scores through
-        # m.net.forward (an (n,1) GEMM) while the SQL oracle's twin is the
-        # vector product X @ w (a GEMV) — BLAS may order those sums
-        # differently in the last ulp, and this row is hash-certified at
-        # 1e-6 where a boundary flip would be a cross-engine mismatch. The
-        # GEMV form is the one the oracle reproduces.
+        # The Breslow body below intentionally mirrors
+        # CoxPHModel.fit_baseline INLINE rather than calling it:
+        # fit_baseline scores through m.net.forward (an (n,1) GEMM) while
+        # the SQL oracle's twin is the vector product X @ w (a GEMV) — BLAS
+        # may order those sums differently in the last ulp, and this row is
+        # hash-certified at 1e-6 where a boundary flip would be a
+        # cross-engine mismatch. The GEMV form is the one the oracle
+        # reproduces.
         pdf = pdf.sort_values(id_col, ignore_index=True)
         X = pdf[feats].to_numpy(dtype=float)
         t = pdf[time_col].to_numpy(dtype=float)

@@ -19,7 +19,7 @@ import numpy as np
 
 from elastic_surv_spark.models.base import SurvModel
 from elastic_surv_spark.models.data import SurvDataset
-from elastic_surv_spark.models.labels import LabelTransform
+from elastic_surv_spark.models.labels import LabelTransform, train_label_transform
 from elastic_surv_spark.models.params import Categorical, Integer, Params
 
 
@@ -45,10 +45,7 @@ class LogisticHazardModel(SurvModel):
 
     def _out_features(self, dataset: SurvDataset) -> int:
         if self.labtrans is None:
-            # cuts fit on the TRAIN split only (≡ reference dataset.py:122-132)
-            self.labtrans = LabelTransform.fit(
-                dataset.train_df, dataset.time_column, self.num_durations
-            )
+            self.labtrans = train_label_transform(dataset, self.num_durations, self.mode)
             self.cuts = self.labtrans.cuts
         return self.labtrans.out_features
 

@@ -1302,7 +1302,7 @@ def ipcw_brier_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM zed GROUP BY seg
     ), zq AS (
         -- per-segment Breslow life-table quantization (cap 100), the
-        -- models/grouped.py:_np_quantize form
+        -- models/cox_ph.py:_np_quantize form
         SELECT z.*, CASE WHEN q.nd <= 100 THEN z.t
                     ELSE least(q.hi, q.lo + least(100.0, ceil((z.t - q.lo) / ((q.hi - q.lo) / 100)))
                                * ((q.hi - q.lo) / 100)) END AS tq
