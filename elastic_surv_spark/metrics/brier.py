@@ -23,15 +23,23 @@ Plan shape: two kernels compute the same numbers.
 - :func:`brier_curve` / :func:`integrated_brier_score` are the Spark plan
   for larger splits. Only the prediction depends on the model, so the work
   that does not is done once, in Python or per row, never per (row, τ)
-  pair: the censoring curve G is a KM aggregate (tiny) collected by
-  :func:`censoring_km` (``SurvModel.score`` takes it, and the τ grid, from
-  the dataset, which computes both once per test split); each grid point's
-  G(τ_k) and cut index ship with τ_k in ONE SQL-text array-of-structs
-  literal, exploded against the rows; G(T_i⁻) is resolved once per row
-  before the explode, so S_i(τ_k) is a plain ``element_at(surv, idx_k)``;
-  one global aggregate per grid point finishes the job, and its |grid|
-  rows are collected, ordered and integrated in Python. The N-row scan and
-  its expansion are map-only; the per-τ aggregate is the one shuffle.
+  pair: each grid point's G(τ_k) and cut index ship with τ_k in ONE
+  SQL-text array-of-structs literal, exploded against the rows; G(T_i⁻)
+  is resolved once per row before the explode, so S_i(τ_k) is a plain
+  ``element_at(surv, idx_k)``; one global aggregate per grid point
+  finishes the job, and its |grid| rows are collected, ordered and
+  integrated in Python. The N-row scan and its expansion are map-only;
+  the per-τ aggregate is the one shuffle.
+
+The censoring curve G is the same on both paths, and neither computes it:
+``SurvModel.score`` takes it, and the τ grid, from the dataset, which
+builds both once per test split. G is a risk table of integer counts per
+(quantized) time and one driver-side product-limit step
+(:func:`~elastic_surv_spark.metrics.km.km_product`). The dataset counts
+the table from the test split's collected arrays when it holds them and
+with one Spark aggregate otherwise; the counts are exact either way, so
+the curve is the same bits. :func:`censoring_km` is the Spark form for
+any frame.
 
 Both integrate with the same trapezoid routine. Rows with a NULL time or
 NULL curve are dropped up front (the convention of the concordance
@@ -50,7 +58,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from elastic_surv_spark.functions.literals import double_array, double_sql
-from elastic_surv_spark.metrics.km import km_curve
+from elastic_surv_spark.metrics.km import km_product, risk_counts
 
 
 def step_lookup(ts: list[float], vals: list[float], t: Column, strict: bool = False) -> Column:
@@ -85,20 +93,18 @@ def censoring_km(
     max_curve_points: int | None = None,
 ) -> tuple[list[float], list[float]]:
     """KM of the censoring distribution (event indicator flipped), collected
-    as ``(ts, gs)`` with ``ts`` ascending.
+    as ``(ts, gs)`` with ``ts`` ascending: the risk table's integer counts
+    (:func:`~elastic_surv_spark.metrics.km.risk_counts`, one aggregate),
+    then :func:`~elastic_surv_spark.metrics.km.km_product` on the driver.
+    Rows with a NULL or NaN time are dropped.
 
-    With discrete times the curve is one row per distinct time — tiny. With
+    With discrete times the table is one row per distinct time — tiny. With
     continuous times it is one row per subject, so pass ``max_curve_points``
     to quantize first and keep the collect O(max_curve_points) at any n.
     """
     flipped = df.withColumn("_cens", 1 - F.col(event_col).cast("int"))
-    curve = (
-        km_curve(flipped, time_col, "_cens", round_to=None, max_curve_points=max_curve_points)
-        .select("t", "survival")
-        .orderBy("t")
-        .collect()
-    )
-    return [float(r["t"]) for r in curve], [float(r["survival"]) for r in curve]
+    ts, n, censored = risk_counts(flipped, time_col, "_cens", max_curve_points)
+    return ts, km_product(n, censored)
 
 
 def brier_curve(

@@ -885,7 +885,10 @@ def concordance_td(
 
     Rows with a NULL time or NULL curve drop up front in every mode (the
     missing-value convention of every concordance kernel), so the answer
-    does not depend on which side of the switch the frame falls.
+    does not depend on which side of the switch the frame falls. Outside
+    ``"exact"`` (which persists its own base) the projected
+    ``(T, E, surv)`` rows persist for the call and are released when it
+    returns or raises, so ``pred``'s plan runs once.
 
     ``SurvModel.score`` calls this only above :data:`EXACT_THRESHOLD` test
     rows, with ``mode="exact"`` (it knows the size, so no probe count).
@@ -901,18 +904,36 @@ def concordance_td(
     if mode not in ("auto", "pairwise", "exact", "sample"):
         raise ValueError(f"concordance_td: unknown mode {mode!r}")
     pred = pred.where(F.col(time_col).isNotNull() & F.col(surv_col).isNotNull())
-    if mode in ("auto", "sample"):
-        n = pred.count()
-        if n > exact_threshold:
-            if mode == "auto":
-                mode = "exact"
-            else:
-                pred = pred.sample(fraction=exact_threshold / n, seed=seed)
-    if mode == "exact":
-        _, _, _, cidx = concordance_td_exact(
-            pred, time_col, event_col, surv_col, cuts
-        )
-        return float("nan") if cidx is None else float(cidx)
+    # both sides of the pairwise self-join (and the probe count) read the
+    # projected rows: persisted, the input's plan (a model's Python forward
+    # pass, say) runs once instead of once per side. The exact kernel
+    # persists its own base.
+    base = None
+    if mode != "exact":
+        base = pred = pred.select(time_col, event_col, surv_col).persist()
+    try:
+        if mode in ("auto", "sample"):
+            n = pred.count()
+            if n > exact_threshold:
+                if mode == "auto":
+                    mode = "exact"
+                else:
+                    pred = pred.sample(fraction=exact_threshold / n, seed=seed)
+        if mode == "exact":
+            _, _, _, cidx = concordance_td_exact(
+                pred, time_col, event_col, surv_col, cuts
+            )
+            return float("nan") if cidx is None else float(cidx)
+        return _pairwise_td(pred, time_col, event_col, surv_col, cuts)
+    finally:
+        if base is not None:
+            base.unpersist()
+
+
+def _pairwise_td(
+    pred: DataFrame, time_col: str, event_col: str, surv_col: str, cuts: list[float]
+) -> float:
+    """:func:`concordance_td`'s pairwise self-join: O(n²) pair work."""
     # every pair's lookups happen at the index subject's time T_i: resolve
     # its cut index and S_i(T_i) once per event row, so the join only reads
     # S_j(T_i) = s_j[idx_i]

@@ -1,26 +1,42 @@
-"""Kaplan-Meier censoring/survival estimator as a window aggregate.
+"""Kaplan-Meier censoring/survival estimator: a risk table of integer
+counts, then the product-limit curve.
 
 ≡ reference: KM is used inside scoring via pycox ``EvalSurv(...,
-censor_surv="km")`` (reference src/elastic_surv/models/base.py:75). Here it is
-a first-class distributed operator: group events per distinct time, reverse
-cumulative sum for the at-risk counts, cumulative ``exp(sum(log(1 - d/n)))``
-for the product-limit curve.
+censor_surv="km")`` (reference src/elastic_surv/models/base.py:75). Both
+forms here count the rows and events at each distinct time, derive the
+at-risk counts as a reverse cumulative sum, and take the product-limit
+curve as ``exp(Σ log(max(1e-300, 1 − d/n)))`` in time order.
 
-Scale: the grouped aggregate shuffles once on the distinct-time domain; the
-two cumulative windows run over the *aggregated* curve, not the raw rows.
-With continuous times the curve domain is one row per subject — unbounded —
-so ``max_curve_points`` gates an equidistant time quantization BEFORE the
-groupBy: it only activates when the distinct-time count exceeds the cap
+- :func:`km_curve` (and the grouped, Nelson-Aalen, RMST and Greenwood
+  curves the registry rows build on it) is a Spark plan: one grouped
+  aggregate over the raw rows, then cumulative windows over the
+  *aggregated* curve. The curve windows are partitioned on a constant:
+  the frame is bounded by construction, so the one-task sort is
+  deliberate (and the planner knows the partitioning instead of warning
+  about an undefined one).
+- :func:`risk_counts` collects only the integer risk table (one aggregate,
+  O(curve points) rows), :func:`risk_counts_np` builds the same table from
+  driver arrays, and :func:`km_product` multiplies it out on the driver,
+  in the windows' operation order. Integers, min/max and the quantized
+  times are exact, so the two tables are equal and the curve does not
+  depend on which one it came from. Scoring's censoring curve takes this
+  form (``brier.censoring_km``, ``SurvDataset``).
+
+With continuous times the curve domain is one row per subject — unbounded
+— so ``max_curve_points`` gates an equidistant time quantization BEFORE the
+aggregate: it only activates when the distinct-time count exceeds the cap
 (value-identical below it), after which the curve, the windows, and any
-driver collect are O(max_curve_points) regardless of n. The curve windows
-are partitioned on a constant: the frame is bounded by construction, so the
-one-task sort is deliberate (and the planner knows the partitioning instead
-of warning about an undefined one). The raw-data pass stays a
-map-side-combinable groupBy.
+driver collect are O(max_curve_points) regardless of n.
+:func:`quantize_times` is the Spark form and :func:`_np_quantize` its
+numpy twin (the same arithmetic, so the same doubles).
 """
 
 from __future__ import annotations
 
+import math
+from itertools import accumulate
+
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -63,6 +79,99 @@ def quantize_times(
     k = F.least(F.lit(float(max_curve_points)), F.ceil((t - F.lit(lo)) / F.lit(width)))
     quant = F.least(F.lit(hi), F.lit(lo) + k * F.lit(width))
     return df.withColumn(time_col, quant)
+
+
+
+def _np_quantize(
+    t: np.ndarray, cap: int,
+    stats: tuple[int, float | None, float | None] | None = None,
+) -> np.ndarray:
+    """numpy form of :func:`quantize_times` (the same min/max + ceil
+    arithmetic, so the same doubles): a no-op at ≤ ``cap`` distinct times.
+    ``stats`` passes ``(distinct count, min, max)`` precomputed, as there."""
+    if stats is None:
+        nd = len(np.unique(t))
+        if nd <= cap:
+            return t
+        stats = (nd, t.min(), t.max())
+    nd, lo, hi = stats
+    if nd <= cap:
+        return t
+    lo, hi = float(lo), float(hi)
+    width = (hi - lo) / cap
+    k = np.minimum(float(cap), np.ceil((t - lo) / width))
+    return np.minimum(hi, lo + k * width)
+
+
+def risk_counts(
+    df: DataFrame,
+    time_col: str,
+    event_col: str,
+    max_curve_points: int | None = None,
+    stats: tuple[int, float | None, float | None] | None = None,
+) -> tuple[list[float], list[int], list[int]]:
+    """The risk table's integer counts, collected: ``(ts, n, d)`` with
+    ``ts`` the ascending distinct times (as double, quantized by
+    ``max_curve_points`` as in :func:`quantize_times`, which ``stats``
+    feeds), ``n`` the rows and ``d`` the events (``event_col`` cast to
+    long, NULL counting 0) at each. Rows with a NULL or NaN time are
+    dropped. One aggregate; the collect is O(max_curve_points) rows."""
+    t = F.col(time_col).cast("double")
+    df = df.where(t.isNotNull() & ~F.isnan(t)).select(
+        t.alias("_t"), F.col(event_col).cast("long").alias("_d")
+    )
+    if max_curve_points is not None:
+        df = quantize_times(df, "_t", max_curve_points, stats=stats)
+    rows = sorted(
+        df.groupBy("_t")
+        .agg(F.count("*").alias("n"), F.sum("_d").alias("d"))
+        .collect(),
+        key=lambda r: r["_t"],
+    )
+    return (
+        [float(r["_t"]) for r in rows],
+        [int(r["n"]) for r in rows],
+        [int(r["d"] or 0) for r in rows],
+    )
+
+
+def risk_counts_np(
+    t: np.ndarray,
+    d: np.ndarray,
+    max_curve_points: int | None = None,
+    stats: tuple[int, float | None, float | None] | None = None,
+) -> tuple[list[float], list[int], list[int]]:
+    """:func:`risk_counts` over driver arrays: times ``t`` and event
+    indicators ``d`` (truncated to integers as Spark's cast truncates, NaN
+    counting 0). Equal to the Spark aggregate's table: NaN times are
+    dropped, −0.0 groups with 0.0, and the quantization is
+    :func:`_np_quantize`."""
+    keep = ~np.isnan(t)
+    t = t[keep] + 0.0  # -0.0 + 0.0 is 0.0: Spark groups the two as one key
+    if max_curve_points is not None:
+        t = _np_quantize(t, max_curve_points, stats)
+    ts, inverse = np.unique(t, return_inverse=True)
+    n = np.bincount(inverse, minlength=len(ts))
+    d = np.bincount(
+        inverse, weights=np.nan_to_num(np.trunc(d[keep]), nan=0.0), minlength=len(ts)
+    )
+    return ts.tolist(), n.tolist(), d.astype(np.int64).tolist()
+
+
+def km_product(n: list[int], d: list[int]) -> list[float]:
+    """Product-limit curve of a risk table's counts (rows ``n`` and events
+    ``d`` per ascending time), on the driver: S = exp(Σ log(max(1e-300,
+    1 − d/n_risk))), with n_risk the rows at or after each time. The sum
+    runs in time order and starts as Spark's running ``sum`` does, so
+    this is :func:`_km_survival`'s window arithmetic on the same counts,
+    apart from the last bit where the JVM's ``StrictMath`` log/exp and
+    the C library's differ."""
+    at_risk = list(accumulate(reversed(n)))[::-1]
+    acc, curve = 0.0, []
+    for dk, nk in zip(d, at_risk):
+        acc += math.log(max(1e-300, 1.0 - dk / nk))
+        curve.append(math.exp(acc))
+    return curve
 
 
 def _risk_table(

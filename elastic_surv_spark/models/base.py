@@ -293,8 +293,12 @@ class SurvModel(ABC):
 
         Only the predictions depend on the model. The censoring curve, the
         grid and the test split's size depend on the split alone, so they
-        come from the dataset, which computes them once however many models
-        (or concurrent Hyperband trials) score on it.
+        come from the dataset's test-split statistics, which it computes
+        once however many models (or concurrent Hyperband trials) score on
+        it: from the test arrays when it holds them (any local fit collects
+        them, so the first score after one starts no Spark job), from one
+        Spark aggregate and the censoring risk table's otherwise, the same
+        values either way.
 
         Up to ``concordance.EXACT_THRESHOLD`` test rows, the curves come
         from :meth:`_test_predictions` (the forward pass on the dataset's

@@ -28,7 +28,7 @@ import math
 import numpy as np
 from pyspark.sql import functions as F
 
-from elastic_surv_spark.metrics.km import quantize_times
+from elastic_surv_spark.metrics.km import _np_quantize, quantize_times
 from elastic_surv_spark.models.base import SurvModel
 from elastic_surv_spark.models.data import SurvDataset
 from elastic_surv_spark.models.params import Categorical, Integer, Params
@@ -136,14 +136,17 @@ class CoxPHModel(SurvModel):
     def fit_baseline(self, X: np.ndarray, t: np.ndarray, e: np.ndarray) -> None:
         """Breslow baseline hazards from driver arrays: the trained net's
         forward pass, the times quantized as ``quantize_times`` quantizes
-        them (:func:`_np_quantize`), then per distinct time the event count
+        them (``km._np_quantize``), then per distinct time the event count
         and the exp(g) sum, each exactly rounded (``math.fsum``), so the
-        curve does not depend on the arrays' row order. The cuts equal the
-        Spark aggregate's; H0 differs from it only by that aggregate's
-        partition-order sums (and BLAS's batch shapes in exp(g))."""
-        eg = np.exp(self.net.forward(X, training=False)[:, 0])
-        e = np.asarray(e, dtype=float)
-        tq = _np_quantize(np.asarray(t, dtype=float), self.max_curve_points)
+        curve does not depend on the arrays' row order. Rows with a NaN
+        (NULL) time have no place in a risk set and are left out. The cuts
+        equal the Spark aggregate's; H0 differs from it only by that
+        aggregate's partition-order sums (and BLAS's batch shapes in
+        exp(g))."""
+        keep = ~np.isnan(t)
+        eg = np.exp(self.net.forward(X[keep], training=False)[:, 0])
+        e = np.asarray(e[keep], dtype=float)
+        tq = _np_quantize(np.asarray(t[keep], dtype=float), self.max_curve_points)
         # ≤ max_curve_points + 1 distinct times, so one mask per time is cheap
         self._set_baseline(
             [
@@ -210,17 +213,6 @@ class CoxPHModel(SurvModel):
         # S(t|x) = exp(-H0(t) * exp(g))  (≡ model_cox_ph.py:106-110)
         eg = np.exp(z[:, 0])
         return np.exp(-np.outer(eg, self.baseline_cumhaz))
-
-
-def _np_quantize(t: np.ndarray, cap: int) -> np.ndarray:
-    """numpy form of ``metrics.km.quantize_times`` (the same min/max + ceil
-    arithmetic, so the same doubles): a no-op at ≤ ``cap`` distinct times."""
-    if len(np.unique(t)) <= cap:
-        return t
-    lo, hi = float(t.min()), float(t.max())
-    width = (hi - lo) / cap
-    k = np.minimum(float(cap), np.ceil((t - lo) / width))
-    return np.minimum(hi, lo + k * width)
 
 
 def _running_sum(values: list[float | None]) -> list[float | None]:

@@ -16,10 +16,24 @@ not once per model:
   that collect: training (through the frame's label transformer), the
   discrete models' label cuts, CoxPH's Breslow curve, and scoring below
   ``concordance.EXACT_THRESHOLD`` test rows;
-- from the test split, the censoring curve, the time grid and the row
-  count, which every score needs;
-- from the train split, the time column's distinct count and range, by
-  which the averaged-mode CoxPH quantizes its Spark Breslow aggregate.
+- each split's statistics (:meth:`SurvDataset._split_stats`): the time
+  column's distinct count, min and max and the rows with a time, and for
+  the test split the censoring curve's risk table (rows and censored rows
+  per time, quantized above ``CENSORING_CURVE_POINTS``). Scoring reads the
+  test split's (the censoring curve, the time grid, the row count); the
+  label cuts and the averaged-mode CoxPH's Breslow quantization read the
+  train split's.
+
+The statistics come from the split's arrays when the dataset already holds
+them, so after a local fit the first score starts no Spark job, and from
+one Spark aggregate per split otherwise (plus the risk table's for the
+test split). Every value is exact — integer counts, min/max, times
+quantized by the same arithmetic (``km._np_quantize`` is the numpy twin
+of ``km.quantize_times``) — so both sources give the same bits and the
+order of calls changes only the speed. Both finish the censoring curve
+through the one driver-side product, ``km.km_product``. Rows with a NULL
+or NaN time are left out of every statistic, as the scoring kernels leave
+them out.
 """
 
 from __future__ import annotations
@@ -32,7 +46,7 @@ from pyspark.sql import functions as F
 
 from elastic_surv_spark.frame import SurvFrame
 from elastic_surv_spark.functions.featurize import OneHotFeaturizer
-from elastic_surv_spark.metrics import brier
+from elastic_surv_spark.metrics import km
 
 #: cap on the censoring curve's points (continuous-time safety; a no-op
 #: while the test split has fewer distinct times)
@@ -58,10 +72,8 @@ class SurvDataset:
             self.test_df = self.test_df.cache()
         # Hyperband trials score concurrently from a thread pool
         self._scoring_lock = threading.Lock()
-        self._scoring_stats: (
-            tuple[tuple[list[float], list[float]], float, float, int] | None
-        ) = None
-        self._train_time_stats: tuple[int, float | None, float | None] | None = None
+        # split name -> (distinct times, min, max, rows, censoring curve)
+        self._stats: dict[str, tuple] = {}
         # split name -> raw (X, t, e); split name -> (label transformer,
         # the arrays with it applied)
         self._raw: dict[str, tuple[np.ndarray, ...]] = {}
@@ -83,63 +95,57 @@ class SurvDataset:
         e = pdf[self.event_column].to_numpy(dtype=float)
         return X, t, e
 
-    def _test_stats(self) -> tuple[tuple[list[float], list[float]], float, float, int]:
-        """``(censoring, min T, max T, rows with a time)`` of the test split:
-        the censoring KM and one aggregate, computed on first use (under a
-        lock, so concurrent scorers wait for one computation)."""
+    def _split_stats(self, split: str) -> tuple:
+        """``(distinct count, min, max, rows)`` of ``split``'s time column
+        as double, NULL and NaN times left out, and for the test split the
+        censoring KM curve as ``brier.censoring_km``'s ``(ts, gs)`` (None
+        for the train split).
+
+        Computed on first use (under the scoring lock, so concurrent fits
+        and scorers wait for one computation): from the split's raw arrays
+        if the dataset holds them, else in Spark. Either way the values are
+        exact, so they do not depend on which source ran.
+        """
         with self._scoring_lock:
-            if self._scoring_stats is None:
-                t = self.time_column
-                censoring = brier.censoring_km(
-                    self.test_df, t, self.event_column,
-                    max_curve_points=CENSORING_CURVE_POINTS,
-                )
-                row = self.test_df.agg(
-                    F.min(t).alias("lo"), F.max(t).alias("hi"), F.count(t).alias("n")
-                ).first()
-                self._scoring_stats = (
-                    censoring, float(row["lo"]), float(row["hi"]), int(row["n"])
-                )
-        return self._scoring_stats
+            stats = self._stats.get(split)
+            if stats is None:
+                raw = self._raw.get(split)
+                censoring = split == "test"
+                if raw is not None:
+                    *time_stats, counts = _array_stats(raw[1], raw[2], censoring)
+                else:
+                    df = self.train_df if split == "train" else self.test_df
+                    *time_stats, counts = _spark_stats(
+                        df, self.time_column, self.event_column, censoring
+                    )
+                curve = None
+                if counts is not None:
+                    ts, n, censored = counts
+                    curve = (ts, km.km_product(n, censored))
+                stats = self._stats[split] = (*time_stats, curve)
+        return stats
 
     def scoring_reference(
         self, n_grid: int = 100
     ) -> tuple[tuple[list[float], list[float]], list[float]]:
         """``(censoring, grid)`` for scoring on the test split: the censoring
         KM curve as ``brier.censoring_km``'s ``(ts, gs)`` and the
-        ``linspace(min T, max T, n_grid)`` time grid.
-
-        Both depend on the test split alone: the curve and the time range
-        are computed once per dataset and reused by every later call.
-        """
-        censoring, lo, hi, _ = self._test_stats()
-        return censoring, np.linspace(lo, hi, n_grid).tolist()
+        ``linspace(min T, max T, n_grid)`` time grid, both from the test
+        split's statistics."""
+        _, lo, hi, _, censoring = self._split_stats("test")
+        return censoring, np.linspace(float(lo), float(hi), n_grid).tolist()
 
     def test_rows(self) -> int:
-        """Rows of the test split with a non-NULL time — the size the
-        scoring kernels see. Counted in the aggregate that gives
-        :meth:`scoring_reference` its time range, so it adds no job."""
-        return self._test_stats()[3]
+        """Rows of the test split with a time (not NULL, not NaN) — the
+        size the scoring kernels see."""
+        return self._split_stats("test")[3]
 
     def train_time_stats(self) -> tuple[int, float | None, float | None]:
         """``(distinct count, min, max)`` of the train split's time column
-        as double — the statistics ``km.quantize_times`` coarsens the
-        averaged-mode CoxPH's Spark Breslow aggregate by.
-
-        Computed in one aggregate on first use (under the scoring lock, so
-        concurrent fits wait for one computation) and reused by every later
-        fit on this dataset.
-        """
-        with self._scoring_lock:
-            if self._train_time_stats is None:
-                t = F.col(self.time_column).cast("double")
-                row = self.train_df.agg(
-                    F.countDistinct(t).alias("nd"),
-                    F.min(t).alias("lo"),
-                    F.max(t).alias("hi"),
-                ).first()
-                self._train_time_stats = (int(row["nd"]), row["lo"], row["hi"])
-        return self._train_time_stats
+        as double: the statistics ``km.quantize_times`` coarsens the
+        averaged-mode CoxPH's Spark Breslow aggregate by, and whose max
+        spans the discrete models' label cuts."""
+        return self._split_stats("train")[:3]
 
     def _split_numpy(
         self, split: str, labelled: bool
@@ -180,6 +186,42 @@ class SurvDataset:
         """The test split's (X, t, e) after the frame's label transformer
         (the local trainer's validation data)."""
         return self._split_numpy("test", labelled=True)
+
+
+def _array_stats(t: np.ndarray, e: np.ndarray, censoring: bool) -> tuple:
+    """:meth:`SurvDataset._split_stats`'s numbers from a split's raw time
+    and event arrays (NULL read as NaN), the censoring risk table as
+    ``km.risk_counts_np`` gives it (or None)."""
+    kept = t[~np.isnan(t)] + 0.0  # -0.0 + 0.0 is 0.0, one value as in Spark
+    times = np.unique(kept)
+    lo, hi = (float(times[0]), float(times[-1])) if len(times) else (None, None)
+    stats = (len(times), lo, hi)
+    counts = None
+    if censoring:
+        # the event flipped as Spark's 1 - cast(e as int) flips it
+        counts = km.risk_counts_np(t, 1 - np.trunc(e), CENSORING_CURVE_POINTS, stats)
+    return (*stats, len(kept), counts)
+
+
+def _spark_stats(df: DataFrame, time_col: str, event_col: str, censoring: bool) -> tuple:
+    """:func:`_array_stats` in Spark: one aggregate, and for the censoring
+    risk table ``km.risk_counts``'s (quantized by the aggregate's
+    statistics, so it needs no statistics job of its own)."""
+    t = F.col(time_col).cast("double")
+    kept = df.where(t.isNotNull() & ~F.isnan(t)).select(
+        t.alias("t"), (1 - F.col(event_col).cast("int")).alias("c")
+    )
+    row = kept.agg(
+        F.countDistinct("t").alias("nd"),
+        F.min("t").alias("lo"),
+        F.max("t").alias("hi"),
+        F.count("*").alias("n"),
+    ).first()
+    stats = (int(row["nd"]), row["lo"], row["hi"])
+    counts = None
+    if censoring:
+        counts = km.risk_counts(kept, "t", "c", CENSORING_CURVE_POINTS, stats)
+    return (*stats, int(row["n"]), counts)
 
 
 def _read_only(arrays):

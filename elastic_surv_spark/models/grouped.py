@@ -33,9 +33,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from elastic_surv_spark.metrics.concordance import harrell_counts
+from elastic_surv_spark.metrics.km import _np_quantize
 from elastic_surv_spark.models.base import SurvModel
 from elastic_surv_spark.models.nn import Adam
-from elastic_surv_spark.models.cox_ph import CoxPHModel, _np_quantize
+from elastic_surv_spark.models.cox_ph import CoxPHModel
 from elastic_surv_spark.models.deephit import DeepHitModel
 from elastic_surv_spark.models.labels import LabelTransform
 from elastic_surv_spark.models.logistic_hazard import LogisticHazardModel

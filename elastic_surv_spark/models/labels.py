@@ -12,10 +12,13 @@ default) or train-quantiles; a duration maps to the index of the last cut
 <= t; the stored ``cuts`` seed the model's ``duration_index``.
 
 ``LabelTransform.fit`` fits the cuts with ONE distributed aggregate (max or
-exact percentiles) on the train split — no data leaves the cluster; the
-averaged (scale) training mode uses it. The local mode already holds the
-train split's raw time array, so :func:`train_label_transform` takes the
-equidistant cuts from its max and starts no Spark job.
+exact percentiles) on any frame — no data leaves the cluster. A model
+trained on a ``SurvDataset`` takes its equidistant cuts from the train
+split's time statistics instead (:func:`train_label_transform`), which the
+dataset computes once: from the split's collected arrays when it holds
+them (always in the local mode, which trains on them), with one Spark
+aggregate otherwise. The max is exact either way, so both modes get the
+cuts ``fit`` would.
 """
 
 from __future__ import annotations
@@ -80,12 +83,12 @@ class LabelTransform:
 
 def train_label_transform(dataset, num_durations: int, mode: str) -> LabelTransform:
     """Equidistant cuts on a ``SurvDataset``'s TRAIN split (≡ reference
-    dataset.py:122-132) for a discrete-time model trained in ``mode``:
-    ``LabelTransform.fit``'s Spark aggregate in the averaged mode, the max
-    of the collected raw train times in the local mode. Both read the raw
-    time column and give the same cuts; the array's NaN reads as NULL
-    (the collect cannot tell them apart), which Spark's ``max`` skips."""
-    if mode == "averaged":
-        return LabelTransform.fit(dataset.train_df, dataset.time_column, num_durations)
-    _, t, _ = dataset.raw_numpy("train")
-    return LabelTransform.equidistant(np.nanmax(t), num_durations)
+    dataset.py:122-132) for a discrete-time model trained in ``mode``,
+    spanning [0, max T] by the split's time statistics (NULL and NaN times
+    left out, as Spark's ``max`` skips NULL). The local mode collects the
+    train arrays first — its fit trains on them — so the statistics come
+    from them and start no Spark job; the averaged mode reads them from
+    wherever the dataset has them."""
+    if mode != "averaged":
+        dataset.raw_numpy("train")
+    return LabelTransform.equidistant(dataset.train_time_stats()[2], num_durations)

@@ -30,7 +30,6 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from elastic_surv_spark.metrics.brier import censoring_km
 from elastic_surv_spark.metrics.concordance import harrell_cindex_counts
 from elastic_surv_spark.metrics.km import km_curve
 from elastic_surv_spark.operators.asof import asof_join
@@ -1302,7 +1301,7 @@ def ipcw_brier_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM zed GROUP BY seg
     ), zq AS (
         -- per-segment Breslow life-table quantization (cap 100), the
-        -- models/cox_ph.py:_np_quantize form
+        -- metrics/km.py:_np_quantize form
         SELECT z.*, CASE WHEN q.nd <= 100 THEN z.t
                     ELSE least(q.hi, q.lo + least(100.0, ceil((z.t - q.lo) / ((q.hi - q.lo) / 100)))
                                * ((q.hi - q.lo) / 100)) END AS tq

@@ -1463,6 +1463,43 @@ def test_grouped_brier_evaluates_source_once(spark, surv_pdf):
     assert key(cached) == key(plain)
 
 
+def test_concordance_td_pairwise_evaluates_source_once(spark, surv_pdf):
+    """Both sides of the pairwise self-join (and the auto mode's probe
+    count) read the projected rows persisted once, so a source with a
+    Python stage (a model's predict frame) runs once, not once per side;
+    the value equals the unpersisted kernel's and nothing stays
+    persisted."""
+    from elastic_surv_spark.metrics.brier import prediction_arrays
+    from elastic_surv_spark.metrics.concordance import concordance_td_local
+
+    rng = np.random.default_rng(5)
+    cuts = np.quantile(surv_pdf["t"], np.linspace(0, 1, 6)).tolist()
+    n = len(surv_pdf)
+    base = rng.uniform(0.5, 1.0, (n, len(cuts)))
+    pdf = surv_pdf.copy()
+    pdf["surv"] = [row.tolist() for row in np.minimum.accumulate(base, axis=1)]
+    src = spark.createDataFrame(pdf)
+    t, e, S = prediction_arrays(pdf, "t", "e", "surv", len(cuts))
+    comparable, concordant, tied = concordance_td_local(t, e, S, cuts)
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    for mode in ("pairwise", "auto"):
+        acc = spark.sparkContext.accumulator(0)
+
+        def counting(batches):
+            for b in batches:
+                acc.add(len(b))
+                yield b
+
+        counted = src.mapInPandas(counting, schema=src.schema)
+        got = concordance_td(counted, "t", "e", "surv", cuts, mode=mode)
+        assert acc.value == n, (mode, acc.value)
+        assert got == (concordant + 0.5 * tied) / comparable, mode
+        assert spark.sparkContext._jsc.getPersistentRDDs().size() == before, mode
+    # the sampling estimator reads a sample of the persisted rows: released too
+    concordance_td(src, "t", "e", "surv", cuts, exact_threshold=n - 20, mode="sample")
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+
+
 def test_grouped_auto_probe_is_bounded(spark):
     """The grouped auto gate must not pay a full groupBy().count() pass
     over a tiny frame (ADVICE r12 #3): a frame whose TOTAL row count fits

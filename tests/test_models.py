@@ -188,6 +188,122 @@ def test_score_equals_fresh_metric_calls(dataset):
     }
 
 
+def _stats_frame(spark, case: str) -> SurvFrame:
+    """A fixture frame shaped for one edge of the split statistics."""
+    from pyspark.sql import functions as F
+
+    pdf = gbsg2_like(400, seed=11)
+    ratio = 0.9
+    if case in ("continuous", "small_cap"):
+        # every test time distinct; "continuous" puts 600 of them above
+        # the 512-point cap
+        pdf = gbsg2_like(1200, seed=11)
+        ratio = 0.5
+        pdf["time"] = pdf["time"] + np.random.default_rng(3).uniform(0.0, 0.999, len(pdf))
+    elif case == "all_censored":
+        pdf["cens"] = 0
+    elif case == "last_time_censored":
+        # every row at the last time censored: the censoring KM's factor
+        # there is 1 − n/n = 0, which the 1e-300 guard keeps finite
+        test_rows = pdf.iloc[int(ratio * len(pdf)):]  # the prefix split's test side
+        pdf.loc[pdf["time"] == test_rows["time"].max(), "cens"] = 0
+    frame = SurvFrame.from_pandas(spark, pdf, "time", "cens", train_ratio=ratio)
+    if case == "null_nan":
+        rid = F.col("_row_id")
+        frame.df = frame.df.withColumn(
+            "time",
+            F.when(rid % 7 == 0, F.lit(float("nan")))
+            .when(rid % 11 == 0, F.lit(None))
+            .otherwise(F.col("time").cast("double")),
+        )
+    return frame
+
+
+def _stats_bits(ds: SurvDataset):
+    """The test and train split statistics as comparable bits."""
+    censoring, grid = ds.scoring_reference()
+    ts, gs = censoring
+    return (
+        [float(v).hex() for v in ts],
+        [float(v).hex() for v in gs],
+        [float(v).hex() for v in grid],
+        ds.test_rows(),
+        ds.train_time_stats(),
+    )
+
+
+@pytest.mark.parametrize(
+    "case",
+    ["integer", "continuous", "small_cap", "null_nan", "all_censored", "last_time_censored"],
+)
+def test_split_stats_equal_from_arrays_and_spark(spark, monkeypatch, case):
+    # the statistics come from the split arrays when the dataset holds
+    # them and from Spark otherwise: integer counts, min/max and the same
+    # quantization arithmetic, so the two sources give the same bits, and
+    # a fresh Spark censoring_km gives the same curve
+    from elastic_surv_spark.metrics.brier import censoring_km
+    from elastic_surv_spark.metrics.km import km_curve
+    import elastic_surv_spark.models.data as data
+    from pyspark.sql import functions as F
+
+    if case == "small_cap":
+        monkeypatch.setattr(data, "CENSORING_CURVE_POINTS", 16)
+    cap = data.CENSORING_CURVE_POINTS
+    frame = _stats_frame(spark, case)
+    from_arrays = SurvDataset(frame)
+    from_arrays.raw_numpy("train"), from_arrays.raw_numpy("test")
+    from_spark = SurvDataset(frame)
+    assert from_spark._raw == {}
+    got = _stats_bits(from_arrays)
+    assert got == _stats_bits(from_spark)
+    assert from_spark._raw == {}  # the Spark source collected no split
+
+    ts, gs = censoring_km(from_arrays.test_df, "time", "cens", max_curve_points=cap)
+    assert ([v.hex() for v in ts], [v.hex() for v in gs]) == got[:2]
+    _, t, _ = from_arrays.raw_numpy("test")
+    t = t[~np.isnan(t)]
+    assert got[3] == len(t)
+    n_distinct = len(np.unique(t))
+    if case in ("continuous", "small_cap"):  # quantized: cap bins + the lower edge
+        assert n_distinct > cap and len(ts) <= cap + 1
+    else:
+        assert len(ts) == n_distinct
+    if case == "all_censored":
+        assert gs[-1] < 1e-300
+    if case == "last_time_censored":
+        assert gs[-1] < 1e-300 < gs[-2]
+    # the driver-side product against the Spark window plan it replaced
+    flipped = from_arrays.test_df.withColumn("_c", 1 - F.col("cens").cast("int")).where(
+        F.col("time").isNotNull() & ~F.isnan("time")
+    )
+    window = km_curve(flipped, "time", "_c", round_to=None, max_curve_points=cap)
+    want = window.orderBy("t").toPandas()
+    assert want["t"].astype(float).tolist() == ts
+    np.testing.assert_allclose(gs, want["survival"].to_numpy(), rtol=1e-13, atol=0)
+
+
+@pytest.mark.parametrize("model_cls", [CoxPHModel, DeepHitModel, LogisticHazardModel])
+def test_score_drops_null_test_times(spark, monkeypatch, model_cls):
+    # a NULL time in the test split is left out of every statistic and of
+    # both scoring paths: finite scores below the switch and above it
+    # (the switch set to 0), and the same C-index on both
+    import elastic_surv_spark.metrics.concordance as concordance
+
+    pdf = gbsg2_like(1000, seed=3).astype({"time": float})
+    pdf.loc[::50, "time"] = np.nan
+    ds = SurvDataset(SurvFrame.from_pandas(spark, pdf, "time", "cens"))
+    assert ds.test_df.where("time IS NULL").count() > 0
+    model = model_cls(in_features=ds.in_features, epochs=2, patience=2, seed=1)
+    model.train(ds)
+    below = model.score(ds)
+    monkeypatch.setattr(concordance, "EXACT_THRESHOLD", 0)
+    above = model.score(ds)
+    for s in (below, above):
+        assert np.isfinite(s["c_index"]) and np.isfinite(s["brier_score"]), s
+    assert above["c_index"] == below["c_index"]
+    assert abs(above["brier_score"] - below["brier_score"]) < 1e-12
+
+
 def test_score_paths_agree(dataset, monkeypatch):
     # above the switch (set to 0 here) score runs the Spark kernels: the
     # exact C-index counts, divided as the driver path divides them (no
@@ -267,13 +383,13 @@ def test_score_below_switch_runs_no_spark_job(spark, dataset):
 
 
 def test_local_train_and_score_run_no_spark_job(spark):
-    # after the split collects and the scoring reference, a local fit (its
-    # label cuts and CoxPH's Breslow curve included) and its score run on
-    # the dataset's arrays alone
+    # after the split collects, a local fit (its label cuts and CoxPH's
+    # Breslow curve included) and its score (the scoring reference
+    # included) run on the dataset's arrays alone
     from tests.test_metrics import _jobs_started
 
     ds = SurvDataset(SurvFrame.from_pandas(spark, gbsg2_like(300), "time", "cens"))
-    ds.train_numpy(), ds.test_numpy(), ds.scoring_reference()
+    ds.train_numpy(), ds.test_numpy()
     for cls in (CoxPHModel, DeepHitModel, LogisticHazardModel):
         model = cls(in_features=ds.in_features, epochs=2, patience=2, seed=4)
         assert _jobs_started(spark, lambda: model.train(ds).score(ds)) == 0, cls.name()

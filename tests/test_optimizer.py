@@ -62,17 +62,19 @@ def test_seed_trim_orders_families(spark):
 
 def test_hyperband_computes_censoring_curve_once_per_dataset(spark, monkeypatch):
     # concurrent trials (parallelism=2) all score on one dataset: the
-    # censoring curve depends on its test split alone, so it is built once
-    import elastic_surv_spark.metrics.brier as brier
+    # censoring curve depends on its test split alone, so it is built once.
+    # Both of the dataset's sources (the split arrays, Spark) finish the
+    # curve through km_product, so that is what is counted
+    import elastic_surv_spark.metrics.km as km
 
     calls = []
-    real = brier.censoring_km
+    real = km.km_product
 
     def counting(*args, **kwargs):
         calls.append(1)
         return real(*args, **kwargs)
 
-    monkeypatch.setattr(brier, "censoring_km", counting)
+    monkeypatch.setattr(km, "km_product", counting)
     frame = SurvFrame.from_pandas(spark, gbsg2_like(200), "time", "cens")
     dataset = SurvDataset(frame)
     opt = HyperbandOptimizer(
