@@ -19,6 +19,12 @@ Package layout
 - ``streaming``  : Structured Streaming window/sessionization variants
 """
 
+# first, before any other import: see _zipcache (Python workers import
+# pyspark from pyspark.zip and re-read its directory on every task otherwise)
+from elastic_surv_spark import _zipcache
+
+_zipcache.install()
+
 __version__ = "0.1.0"
 
-from elastic_surv_spark.frame import SurvFrame  # noqa: F401
+from elastic_surv_spark.frame import SurvFrame  # noqa: E402, F401

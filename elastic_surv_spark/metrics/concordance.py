@@ -890,11 +890,14 @@ def concordance_td(
     ``(T, E, surv)`` rows persist for the call and are released when it
     returns or raises, so ``pred``'s plan runs once.
 
-    ``SurvModel.score`` calls this only above :data:`EXACT_THRESHOLD` test
-    rows, with ``mode="exact"`` (it knows the size, so no probe count).
-    Below it, it collects the predictions (at most that many rows × |cuts|
-    doubles) and counts them with :func:`concordance_td_local`, which
-    gives the pairwise value bit for bit.
+    ``SurvModel.score`` (``models.base.score_model``) does not call this:
+    it knows the test split's size, so it needs no probe count. Above
+    :data:`EXACT_THRESHOLD` test rows it calls
+    :func:`concordance_td_exact` on the cached prediction frame directly.
+    Below it, it runs the forward pass on the dataset's test arrays on
+    the driver (at most that many rows × |cuts| doubles, no Spark job)
+    and counts the curves with :func:`concordance_td_local`, which gives
+    the pairwise value bit for bit.
 
     The curve lookup S(t) = surv[max {k : cuts[k] <= t}] is a JVM-side
     higher-order expression evaluated once per event row, at its own T_i;

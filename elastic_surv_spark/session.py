@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 
@@ -54,9 +55,20 @@ def tune(spark: SparkSession) -> SparkSession:
         # and unix_micros/watermark semantics identical to duckdb's epoch_us
         "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
     }
+    set_confs(spark, conf)
+    return spark
+
+
+def set_confs(spark: SparkSession, conf: dict[str, str]) -> None:
+    """Set each runtime config, skipping the ones the session's owner locked.
+
+    Spark refuses a static or otherwise unmodifiable key with an
+    ``AnalysisException`` (``CANNOT_MODIFY_CONFIG`` /
+    ``CANNOT_MODIFY_STATIC_CONFIG``); that key keeps its value. Any other
+    error (a stopped session, a bad value) propagates.
+    """
     for k, v in conf.items():
         try:
             spark.conf.set(k, v)
-        except Exception:  # pragma: no cover - config locked by owner
+        except AnalysisException:
             pass
-    return spark

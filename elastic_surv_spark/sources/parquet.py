@@ -17,6 +17,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from elastic_surv_spark.session import set_confs
+
 TABLES = (
     "region",
     "nation",
@@ -67,6 +69,13 @@ def normalize_timestamps(df: DataFrame) -> DataFrame:
     return df
 
 
+# set before every parquet read of the star-schema tables (batch and stream)
+PARQUET_READ_CONFS = {
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+}
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # The harness regenerates the testdata parquet between rounds with
     # varying timestamp physical types: TIMESTAMP(NANOS) (Spark rejects by
@@ -76,14 +85,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # TimestampType fields-as-UTC directly AT THE SCAN, keeping predicate
     # pushdown; the session timezone is pinned UTC in session.py, so epoch
     # arithmetic matches duckdb's epoch_us on the same naive values).
-    for k, v in (
-        ("spark.sql.legacy.parquet.nanosAsLong", "true"),
-        ("spark.sql.parquet.inferTimestampNTZ.enabled", "false"),
-    ):
-        try:
-            spark.conf.set(k, v)
-        except Exception:  # pragma: no cover - conf locked by session owner
-            pass
+    set_confs(spark, PARQUET_READ_CONFS)
     df = spark.read.parquet(table_path(sf_dir, name))
     if name == "events" and isinstance(df.schema["ts"].dataType, T.LongType):
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))

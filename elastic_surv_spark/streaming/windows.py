@@ -67,16 +67,10 @@ def read_events_stream(
     is the default; ``ts_is_nanos`` remains as an explicit override."""
     import os
 
-    from elastic_surv_spark.sources.parquet import ntz_to_utc_ts
+    from elastic_surv_spark.session import set_confs
+    from elastic_surv_spark.sources.parquet import PARQUET_READ_CONFS, ntz_to_utc_ts
 
-    for k, v in (
-        ("spark.sql.legacy.parquet.nanosAsLong", "true"),
-        ("spark.sql.parquet.inferTimestampNTZ.enabled", "false"),
-    ):
-        try:
-            spark.conf.set(k, v)
-        except Exception:  # pragma: no cover - conf locked by session owner
-            pass
+    set_confs(spark, PARQUET_READ_CONFS)
 
     def _reader(schema):
         r = spark.readStream.schema(schema).option(

@@ -320,8 +320,10 @@ def test_score_paths_agree(dataset, monkeypatch):
     assert abs(spark_path["brier_score"] - driver["brier_score"]) < 1e-12
 
 
-def _persistent_rdds(spark) -> int:
-    return spark.sparkContext._jsc.getPersistentRDDs().size()
+def _persistent_rdds(spark) -> set[int]:
+    # ids, not a count: the context cleaner may unpersist other tests'
+    # garbage-collected RDDs meanwhile; the check is that no new one stays
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
 
 def test_score_releases_prediction_frame_when_a_metric_raises(spark, dataset, monkeypatch):
@@ -344,7 +346,7 @@ def test_score_releases_prediction_frame_when_a_metric_raises(spark, dataset, mo
     monkeypatch.setattr(base, "integrated_brier_score", failing_metric)
     with pytest.raises(RuntimeError, match="metric failed"):
         model.score(dataset)
-    assert _persistent_rdds(spark) == before
+    assert _persistent_rdds(spark) <= before
 
 
 def test_score_driver_path_propagates_a_raising_kernel(spark, dataset, monkeypatch):
@@ -365,7 +367,7 @@ def test_score_driver_path_propagates_a_raising_kernel(spark, dataset, monkeypat
     monkeypatch.setattr(base, "integrated_brier_score_local", failing_kernel)
     with pytest.raises(RuntimeError, match="kernel failed"):
         model.score(dataset)
-    assert _persistent_rdds(spark) == before
+    assert _persistent_rdds(spark) <= before
 
 
 def test_score_below_switch_runs_no_spark_job(spark, dataset):
