@@ -45,6 +45,10 @@ def grouped_topk(
         # in the phase-2 Spark window (nulls first ascending, NaN greatest),
         # so rows with a null/NaN order key are never pruned here — phase 2
         # ranks them exactly. Pruning stays tight when order keys are clean.
+        # The package import installs its zipimport fix in the worker (see
+        # _zipcache): this closure references nothing else of the library.
+        import elastic_surv_spark  # noqa: F401
+
         best: pd.DataFrame | None = None
         dirty: list[pd.DataFrame] = []
         for pdf in batches:

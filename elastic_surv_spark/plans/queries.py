@@ -27,6 +27,7 @@ from dataclasses import dataclass
 from pathlib import Path
 from typing import Callable
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -2439,18 +2440,11 @@ def _shared_frames(cache: dict, max_entries: int, spark, key, build):
         return hit[1:]
     frames = tuple(build())
 
-    def _release(entry):
-        for frame in entry[1:]:
-            try:
-                frame.unpersist()
-            except Exception:  # stale session — nothing to release
-                pass
-
     stale = cache.pop(key, None)
     if stale is not None:
-        _release(stale)
+        _unpersist_all(stale[1:])
     while len(cache) >= max_entries:
-        _release(cache.pop(next(iter(cache))))
+        _unpersist_all(cache.pop(next(iter(cache)))[1:])
     cache[key] = (spark, *frames)
     return frames
 
@@ -2481,14 +2475,23 @@ def release_shared_caches() -> None:
                     f"got {type(entry).__name__} of len "
                     f"{len(entry) if isinstance(entry, tuple) else 'n/a'}"
                 )
-            for obj in entry[1:]:  # entry[0] is the owning SparkSession
-                unpersist = getattr(obj, "unpersist", None)
-                if callable(unpersist):
-                    try:
-                        unpersist()
-                    except Exception:  # noqa: S110 — stale session
-                        pass
+            _unpersist_all(entry[1:])  # entry[0] is the owning SparkSession
         cache.clear()
+
+
+def _unpersist_all(objs) -> None:
+    """Unpersist each object that has an ``unpersist``. An object of a
+    stopped session raises a py4j error there (``Py4JJavaError`` over the
+    JVM's NPE while the JVM lives, ``Py4JNetworkError`` after it exits) and
+    has nothing left to release, so it is skipped; any other error
+    propagates."""
+    for obj in objs:
+        unpersist = getattr(obj, "unpersist", None)
+        if callable(unpersist):
+            try:
+                unpersist()
+            except Py4JError:
+                pass
 
 
 def family_stages(name: str) -> list:

@@ -320,3 +320,44 @@ def test_every_shared_cache_reader_declares_family_stages():
         "registry rows reading a shared-cache builder without a "
         f"family_stages declaration: {missing}"
     )
+
+
+class _RaisingFrame:
+    def __init__(self, exc: Exception):
+        self._exc = exc
+
+    def unpersist(self):
+        raise self._exc
+
+
+def test_unpersist_all_skips_only_py4j_errors():
+    """A frame of a stopped session raises a py4j error from ``unpersist``
+    and is skipped; the objects after it are still released. Any other
+    error is a bug and propagates, from both release paths."""
+    import pytest
+    from py4j.protocol import Py4JError
+
+    released: list[str] = []
+    Q._unpersist_all([
+        _RaisingFrame(Py4JError("stopped session")),
+        [("a", "b")],  # no unpersist: ignored
+        _StubFrame(released, "live"),
+    ])
+    assert released == ["live"]
+
+    with pytest.raises(ValueError, match="boom"):
+        Q._unpersist_all([_RaisingFrame(ValueError("boom")), _StubFrame(released, "x")])
+    assert released == ["live"]
+
+    cache = {"old": (_StubSession(), _RaisingFrame(ValueError("evict")))}
+    with pytest.raises(ValueError, match="evict"):
+        Q._shared_frames(cache, 1, object(), "new", lambda: (_StubFrame([], "n"),))
+    Q._VOCAB_COUNTS["sfA"] = (_StubSession(), _RaisingFrame(Py4JError("gone")))
+    Q.release_shared_caches()
+    assert Q._VOCAB_COUNTS == {}
+    Q._VOCAB_COUNTS["sfA"] = (_StubSession(), _RaisingFrame(ValueError("loud")))
+    try:
+        with pytest.raises(ValueError, match="loud"):
+            Q.release_shared_caches()
+    finally:
+        Q._VOCAB_COUNTS.clear()

@@ -69,3 +69,44 @@ def test_grouped_topk_null_and_nan_order_keys_match_window(spark):
         assert sorted(map(tuple, got.collect())) == sorted(
             map(tuple, want.collect())
         ), f"ascending={asc}"
+
+
+def test_local_topk_closure_imports_the_package(tmp_path):
+    """The phase-1 closure imports the package when it runs, so a Python
+    worker that runs only this closure still installs the package's
+    zipimport fix (elastic_surv_spark._zipcache). Checked in a fresh
+    interpreter: unpickle the closure as a worker would, run it on one
+    batch, and look for the package in ``sys.modules``."""
+    import os
+    import subprocess
+    import sys
+    from types import SimpleNamespace
+
+    from pyspark import cloudpickle
+
+    class _Captured(Exception):
+        pass
+
+    def capture(fn, schema):
+        raise _Captured(fn)
+
+    stub = SimpleNamespace(schema=SimpleNamespace(fields=[]), mapInPandas=capture)
+    with pytest.raises(_Captured) as exc:
+        grouped_topk(stub, ["g"], ["v"], 1)
+    path = tmp_path / "local_topk.pkl"
+    path.write_bytes(cloudpickle.dumps(exc.value.args[0]))
+    script = (
+        "import pickle, sys\n"
+        "import pandas as pd\n"
+        f"fn = pickle.loads(open({str(path)!r}, 'rb').read())\n"
+        "before = 'elastic_surv_spark' in sys.modules\n"
+        "pdf = pd.DataFrame({'g': ['a', 'a', 'b'], 'v': [1, 3, 2]})\n"
+        "(out,) = fn(iter([pdf]))\n"
+        "print(before, 'elastic_surv_spark' in sys.modules, sorted(out['v']))\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "PYTHONPATH": root}
+    res = subprocess.run([sys.executable, "-c", script], cwd=str(tmp_path), env=env,
+                         capture_output=True, text=True, timeout=120)
+    assert res.returncode == 0, res.stderr
+    assert res.stdout.split() == ["False", "True", "[2,", "3]"], res.stdout
