@@ -141,8 +141,8 @@ class CoxPHModel(SurvModel):
         curve does not depend on the arrays' row order. Rows with a NaN
         (NULL) time have no place in a risk set and are left out. The cuts
         equal the Spark aggregate's; H0 differs from it only by that
-        aggregate's partition-order sums (and BLAS's batch shapes in
-        exp(g))."""
+        aggregate's partition-order sums (the forward pass gives each row
+        the same exp(g) in any batch)."""
         keep = ~np.isnan(t)
         eg = np.exp(self.net.forward(X[keep], training=False)[:, 0])
         e = np.asarray(e[keep], dtype=float)

@@ -196,7 +196,10 @@ def score_per_group(
     co-location: each Arrow batch groups its rows by the group value
     pandas-side and a per-task cache deserializes every referenced model
     at most once. Bit-identical to scoring the group's rows with the
-    loaded model locally (asserted in tests).
+    loaded model locally (asserted in tests), whatever rows share an Arrow
+    batch: inference sums each dense layer in one fixed order
+    (``models/nn.py:fixed_order_matmul``) and every later step is
+    row-wise, so a row's risk depends on that row alone.
     """
     from typing import Iterator
 
@@ -312,6 +315,13 @@ def pseudo_cox_registry(
       events at P ≈ 1e-8/point, and any residual 1e-6-scale H0 wobble is
       invisible to the final risk's own 6-digit round.
 
+    The docs load without Spark, and ``score_per_group`` scores them
+    bit-identically to local scoring with the loaded model (asserted in
+    tests): the one-layer net's inference forward is the left-to-right
+    ``β_0·x_0 + β_1·x_1 + …`` of ``models/nn.py:fixed_order_matmul`` —
+    the SQL twin's own order — so a row's βx, and its risk, do not depend
+    on which rows share its batch.
+
     Training itself is not SQL-expressible — the trained path is
     pytest-certified (fit_per_group → score_per_group → metric quartet,
     tests/test_grouped_models.py); this builder certifies every OTHER
@@ -340,14 +350,15 @@ def pseudo_cox_registry(
 
         # deterministic float-sum order within the engine (grouped-map row
         # arrival order is not stable across runs).
-        # The Breslow body below intentionally mirrors
-        # CoxPHModel.fit_baseline INLINE rather than calling it:
-        # fit_baseline scores through m.net.forward (an (n,1) GEMM) while
-        # the SQL oracle's twin is the vector product X @ w (a GEMV) — BLAS
-        # may order those sums differently in the last ulp, and this row is
-        # hash-certified at 1e-6 where a boundary flip would be a
-        # cross-engine mismatch. The GEMV form is the one the oracle
-        # reproduces.
+        # The Breslow body below mirrors CoxPHModel.fit_baseline INLINE and
+        # is kept as the oracle certified it. Neither form is the DuckDB
+        # twin's arithmetic to the ulp: BLAS's `X @ w` here is off the
+        # twin's left-to-right `w0*x0 + w1*x1` on ~27% of rows (1,000
+        # random rows, 2 features), while m.net.forward at inference sums
+        # in exactly that order; and numpy's and DuckDB's exp differ in the
+        # last ulp either way. So H0's rounding at `h0_round` digits stays
+        # the parity hinge; calling fit_baseline (fsum per time) instead
+        # would only move which boundary events could flip.
         pdf = pdf.sort_values(id_col, ignore_index=True)
         X = pdf[feats].to_numpy(dtype=float)
         t = pdf[time_col].to_numpy(dtype=float)

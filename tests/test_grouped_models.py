@@ -268,6 +268,46 @@ def test_score_per_group_registry_as_table_parity_and_plan(spark, seg_df):
         )
 
 
+@pytest.mark.parametrize(
+    "in_features, hidden, out",
+    [(2, [], 1), (2, [], 5), (6, [32, 32], 1), (6, [32, 16], 5)],
+    ids=["linear-cox", "linear-discrete", "mlp-cox", "mlp-discrete"],
+)
+def test_inference_forward_is_row_independent(in_features, hidden, out):
+    """score_per_group scores whichever rows share an Arrow batch, and its
+    risks must equal local scoring of the whole group: a row's inference
+    output may not depend on the other rows of its batch. Rows 88-89 of a
+    90-row batch are where BLAS's trailing-row rounding showed; every row
+    alone, the tail alone and the full matrix must give the same bits, and
+    those bits are each dense layer's left-to-right sum Σ_j x[:, j]·W[j]."""
+    from elastic_surv_spark.models.nn import MLP, BatchNorm1d, Dense
+
+    rng = np.random.default_rng(17)
+    net = MLP(in_features, hidden, out, batch_norm=True, dropout=0.1, seed=3)
+    for layer in net.layers:  # trained-looking BN statistics, not the init
+        if isinstance(layer, BatchNorm1d):
+            layer.running_mean[...] = rng.normal(size=layer.running_mean.shape)
+            layer.running_var[...] = rng.uniform(0.5, 2.0, layer.running_var.shape)
+    X = rng.normal(size=(90, in_features))
+
+    full = net.forward(X, training=False)
+    assert np.array_equal(net.forward(X[88:90], training=False), full[88:90])
+    alone = np.vstack([net.forward(X[i : i + 1], training=False) for i in range(90)])
+    assert np.array_equal(alone, full)
+
+    want = X
+    for layer in net.layers:
+        if isinstance(layer, Dense):
+            x, want = want, want[:, 0, None] * layer.W[0]
+            for j in range(1, layer.W.shape[0]):
+                want = want + x[:, j, None] * layer.W[j]
+            if layer.b is not None:
+                want = want + layer.b
+        else:
+            want = layer.forward(want, training=False)
+    assert np.array_equal(full, want)
+
+
 def test_pseudo_cox_registry_builds_loadable_linear_models(spark, seg_df):
     """pseudo_cox_registry (the segmented_cox_pipeline certification twin):
     real CoxPH serde docs — pseudo-β regenerated arithmetically, Breslow

@@ -464,8 +464,8 @@ def test_cox_time_stats_computed_once_per_dataset(spark, monkeypatch):
 def test_numpy_breslow_matches_spark_aggregate(spark, continuous):
     # the local mode's numpy Breslow and the averaged mode's Spark aggregate
     # on one trained net: the same cuts, and H0 apart only by the Spark
-    # sums' partition order and BLAS's batch shapes: within 8 ulps (at
-    # most 2 seen on four fixture seeds)
+    # sums' partition order (each row's exp(g) is the same bits in any
+    # batch): within 8 ulps (at most 2 seen on four fixture seeds)
     pdf = gbsg2_like()
     if continuous:
         rng = np.random.default_rng(7)
